@@ -67,6 +67,23 @@ def hadoop_read_text(spark: SparkSession, path: str) -> str | None:
         stream.close()
 
 
+def hadoop_swap_dir(spark: SparkSession, live: str, staged: str) -> None:
+    """Replace directory ``live`` with ``staged`` by renames: live →
+    ``<live>_old``, staged → live, then delete ``<live>_old``.  The
+    compaction swap: atomic on HDFS/local FS; on rename-less object
+    stores it degrades to copy+delete with a visible-but-consistent
+    intermediate (both generations hold identical rows).  Single-writer:
+    run between folds."""
+    fs, live_p = _fs_and_path(spark, live)
+    _, staged_p = _fs_and_path(spark, staged)
+    _, old_p = _fs_and_path(spark, f"{live}_old")
+    if fs.exists(old_p):
+        fs.delete(old_p, True)
+    fs.rename(live_p, old_p)
+    fs.rename(staged_p, live_p)
+    fs.delete(old_p, True)
+
+
 def hadoop_count_files(
     spark: SparkSession, path: str, suffix: str = ".parquet"
 ) -> int:

@@ -254,16 +254,17 @@ def compact_bucketed_store(
     metadata-bound (the classic streaming small-files failure).  This
     maintenance op rewrites the store bucketed (repartition on the
     bucket key aligns tasks to buckets, so each bucket lands in one
-    file) and swaps it in via two FS renames, mirroring
-    streaming/neardup.py:compact_store's single-writer contract: run
-    between epochs; the rename swap is atomic on HDFS/local FS.
+    file) and swaps it in with operators/fs.py:hadoop_swap_dir
+    (single-writer: run between epochs; the rename swap is atomic on
+    HDFS/local FS).
 
     Reads via plain parquet (bucket metadata is ignored on read), so
     this also MIGRATES a legacy unbucketed store into the bucketed
     layout.  Returns the data-file count after compaction."""
     from kafkastreamsproject_spark.operators.fs import (
-        _fs_and_path,
+        hadoop_count_files,
         hadoop_has_files,
+        hadoop_swap_dir,
     )
     from pyspark.sql import functions as F
 
@@ -284,25 +285,13 @@ def compact_bucketed_store(
         .saveAsTable(tmp_name)
     )
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
-    fs, src = _fs_and_path(spark, path)
-    _, tmp_p = _fs_and_path(spark, tmp_path)
-    old = f"{path}_old"
-    _, old_p = _fs_and_path(spark, old)
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    fs.rename(src, old_p)
-    fs.rename(tmp_p, src)
-    fs.delete(old_p, True)
+    hadoop_swap_dir(spark, path, tmp_path)
     # the rename swap moved the old sidecar away with the old files;
     # re-stamp the (unchanged) spec on the compacted directory
     write_store_meta(spark, path, bucket_cols, n_buckets)
     if spark.catalog.tableExists(table_name):
         spark.sql(f"REFRESH TABLE {table_name}")
-    return sum(
-        1
-        for status in fs.listStatus(src)
-        if status.getPath().getName().endswith(".parquet")
-    )
+    return hadoop_count_files(spark, path)
 
 
 def max_files_per_bucket(spark: SparkSession, path: str) -> int:
@@ -311,10 +300,9 @@ def max_files_per_bucket(spark: SparkSession, path: str) -> int:
     quantity compaction exists to bound — every epoch appends one
     bucket-encoded file per task, and the per-batch probe goes
     metadata-bound as files pile up — so the streaming sinks use it
-    as their ADAPTIVE compaction trigger (r12 verdict #6: the
-    hand-tuned ``compact_every=3`` cadence was load-bearing; a
-    file-count trigger compacts exactly when the store needs it,
-    whatever the epoch pattern).  One directory listing, driver-side
+    as their ADAPTIVE compaction trigger (a file-count trigger
+    compacts exactly when the store needs it, whatever the epoch
+    pattern).  One directory listing, driver-side
     and bounded by the file count the trigger itself keeps small."""
     import re
     from collections import Counter

@@ -42,12 +42,13 @@ Species and sizing rules
   (~80 MB at N=10¹⁰, dim=1024) — collected at first fold, reused for
   the stream's lifetime, invalidated on (re)creation.
 
-Compaction cadence (all append stores) is ADAPTIVE: a store compacts
-when any bucket exceeds ``compact_files_per_bucket`` data files
-(plain append logs: ``compact_files_plain`` total files) — see
-sources/bucketed.py:max_files_per_bucket.  No epoch-count cadence
-needs hand-tuning; ``compact_every`` survives as an explicit
-override.
+Compaction cadence (all append stores) is ADAPTIVE: a streaming sink
+compacts its store when any bucket exceeds ``compact_files_per_bucket``
+data files (plain append logs: ``compact_files_plain`` total files) —
+see sources/bucketed.py:max_files_per_bucket.  The one check reading
+these thresholds is streaming/pipeline.py:_replay_safe_sink, at fold
+time, so no sink carries a threshold or epoch-cadence argument of its
+own.
 
 Changing a default here changes what NEW stores are created with;
 existing stores keep their sidecar-pinned spec and reject mismatched

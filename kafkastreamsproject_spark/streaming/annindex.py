@@ -82,6 +82,7 @@ from kafkastreamsproject_spark.sources.bucketed import (
     shuffle_scoped_to_buckets,
     store_table_name,
 )
+from kafkastreamsproject_spark.streaming.pipeline import _replay_safe_sink
 
 _CODES_SCHEMA = "cell int, vec_id long, s int, cid int"
 _SEEN_SCHEMA = "vec_id long"
@@ -1300,54 +1301,23 @@ def ann_range_index(
     return out
 
 
-def to_ann_ingest_sink(
-    vectors: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_every: int | None = None,
-    compact_files_per_bucket: int | None = DEFAULTS.compact_files_per_bucket,
-):
+def to_ann_ingest_sink(vectors: DataFrame, store_path: str, checkpoint: str):
     """Streaming form: fold each micro-batch through
-    :func:`ann_ingest_batch`, skipping replayed epochs via
-    ``_applied_epochs`` markers (the to_rollup_store_sink idiom).
-    Geometry (incl. the stores' bucket width) comes from the sidecar
-    written at :func:`create_ann_store` — the stream carries no
-    geometry of its own.  Compaction cadence is ADAPTIVE by default
-    (r12 verdict #6): when any codes bucket exceeds
-    ``compact_files_per_bucket`` data files, both stores compact
-    between folds; ``compact_every=k`` remains as an explicit fixed
-    cadence (either trigger fires)."""
-    from kafkastreamsproject_spark.operators.fs import (
-        hadoop_exists,
-        hadoop_touch,
-    )
-    from kafkastreamsproject_spark.sources.bucketed import (
-        max_files_per_bucket,
-    )
-
-    markers = f"{store_path}/_applied_epochs"
-    applied = {"n": 0}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = f"{markers}/{epoch_id}.done"
-        if hadoop_exists(spark, marker):
-            return
-        ann_ingest_batch(batch_df, store_path)
-        hadoop_touch(spark, marker)
-        applied["n"] += 1
-        if (compact_every and applied["n"] % compact_every == 0) or (
-            compact_files_per_bucket
-            and max_files_per_bucket(spark, _codes_path(store_path))
-            > compact_files_per_bucket
-        ):
-            compact_codes(spark, store_path)
-
-    return (
-        vectors.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    :func:`ann_ingest_batch` via streaming/pipeline.py's
+    :func:`_replay_safe_sink` (replayed epochs are skipped; both
+    stores compact between folds once any codes bucket passes the
+    storeconfig file-count threshold).  Geometry (incl. the stores'
+    bucket width) comes from the sidecar written at
+    :func:`create_ann_store` — the stream carries no geometry of its
+    own."""
+    return _replay_safe_sink(
+        vectors,
+        store_path,
+        checkpoint,
+        lambda batch: ann_ingest_batch(batch, store_path),
+        available_now=False,
+        compact=lambda spark: compact_codes(spark, store_path),
+        compact_probe=_codes_path(store_path),
     )
 
 

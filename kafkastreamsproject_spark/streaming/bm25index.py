@@ -27,13 +27,13 @@ two persistent stores folded per micro-batch:
   query probe reads only its terms' rows through a pushed
   ``t IN (...)`` filter; the scoring shuffle is ∝ matching postings.
 
-Idempotency & crash windows (the to_rollup_store_sink /
-streaming/neardup.py contract): a fully-applied epoch replayed through
+Idempotency & crash windows (the streaming/pipeline.py
+``_replay_safe_sink`` contract): a fully-applied epoch replayed through
 :func:`index_ingest_batch` is a no-op — the seen probe yields nothing,
 postings append nothing, and stats re-derive identically because they
 aggregate the (unchanged) seen store rather than folding a snapshot.
 The streaming form additionally skips replayed epochs via
-``_applied_epochs`` markers, so the one non-atomic window — a crash
+per-epoch markers, so the one non-atomic window — a crash
 AFTER the postings append and BEFORE the seen append, where a
 batch-level replay would re-append the same postings — is reachable
 only through the batch API; postings are written first because seen
@@ -93,6 +93,7 @@ from kafkastreamsproject_spark.sources.bucketed import (
     shuffle_scoped_to_buckets,
     store_table_name,
 )
+from kafkastreamsproject_spark.streaming.pipeline import _replay_safe_sink
 
 _POSTINGS_SCHEMA = "t string, doc_id long, tf long, dl long"
 _SEEN_SCHEMA = "doc_id long, dl long"
@@ -751,53 +752,25 @@ def to_index_ingest_sink(
     docs: DataFrame,
     store_path: str,
     checkpoint: str,
-    compact_every: int | None = None,
     n_buckets: int = N_BUCKETS,
     df_cap: int | None = None,
-    compact_files_per_bucket: int | None = DEFAULTS.compact_files_per_bucket,
 ):
     """Streaming form: fold each micro-batch through
-    :func:`index_ingest_batch`, skipping replayed epochs via
-    ``_applied_epochs`` markers (the to_rollup_store_sink idiom — this
-    is what keeps the batch API's one crash window unreachable in
-    streaming operation).  Compaction cadence is ADAPTIVE by default
-    (r12 verdict #6): after each applied fold, if any postings bucket
-    has accumulated more than ``compact_files_per_bucket`` data files
-    the stores compact (between folds — single-writer window), so the
-    probe never goes metadata-bound no matter the epoch pattern and
-    nothing is hand-tuned.  ``compact_every=k`` remains as an explicit
-    fixed cadence (either trigger fires compaction)."""
-    from kafkastreamsproject_spark.operators.fs import (
-        hadoop_exists,
-        hadoop_touch,
-    )
-    from kafkastreamsproject_spark.sources.bucketed import (
-        max_files_per_bucket,
-    )
-
-    markers = f"{store_path}/_applied_epochs"
-    applied = {"n": 0}
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = f"{markers}/{epoch_id}.done"
-        if hadoop_exists(spark, marker):
-            return  # replayed epoch: already folded
-        index_ingest_batch(batch_df, store_path, n_buckets, df_cap=df_cap)
-        hadoop_touch(spark, marker)
-        applied["n"] += 1
-        if (compact_every and applied["n"] % compact_every == 0) or (
-            compact_files_per_bucket
-            and max_files_per_bucket(spark, _postings_path(store_path))
-            > compact_files_per_bucket
-        ):
-            compact_postings(spark, store_path, n_buckets)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    :func:`index_ingest_batch` via streaming/pipeline.py's
+    :func:`_replay_safe_sink` — replayed epochs are skipped, which keeps
+    the batch API's one crash window unreachable in streaming
+    operation, and the stores compact between folds once any postings
+    bucket passes the storeconfig file-count threshold."""
+    return _replay_safe_sink(
+        docs,
+        store_path,
+        checkpoint,
+        lambda batch: index_ingest_batch(
+            batch, store_path, n_buckets, df_cap=df_cap
+        ),
+        available_now=False,
+        compact=lambda spark: compact_postings(spark, store_path, n_buckets),
+        compact_probe=_postings_path(store_path),
     )
 
 

@@ -103,8 +103,9 @@ def compact_store(
 def line_dedup_ingest_batch(
     batch: DataFrame, store_path: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
-    """One fold of the line-dedup-at-ingest loop (the foreachBatch
-    body, exposed for tests and backfills).
+    """One fold of the line-dedup-at-ingest loop, one call per arriving
+    shard (a stream would run it per epoch through streaming/pipeline.py's
+    ``_replay_safe_sink``).
 
     Returns per-document stats ``(doc_id, n_lines, n_kept, kept_ords,
     keep_frac)`` where a line is kept iff its hash is absent from the
@@ -169,42 +170,3 @@ def line_dedup_ingest_batch(
             ["lh"], n_buckets,
         )
     return stats
-
-
-def to_line_dedup_ingest_sink(
-    docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    out_table: str,
-    compact_every: int | None = None,
-    n_buckets: int = N_BUCKETS,
-    compact_files_per_bucket: int | None = DEFAULTS.compact_files_per_bucket,
-):
-    """Streaming form: fold each micro-batch through
-    :func:`line_dedup_ingest_batch` and surface per-doc stats in a
-    global temp view (test double for a metrics sink).  Compaction
-    cadence is ADAPTIVE by default (r12 verdict #6): when any bucket
-    of the line store exceeds ``compact_files_per_bucket`` data
-    files, the store compacts between folds; ``compact_every=k``
-    remains as an explicit fixed cadence (either trigger fires)."""
-    from kafkastreamsproject_spark.sources.bucketed import (
-        max_files_per_bucket,
-    )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        stats = line_dedup_ingest_batch(batch_df, store_path, n_buckets)
-        stats.createOrReplaceGlobalTempView(out_table)
-        spark = batch_df.sparkSession
-        if (compact_every and (epoch_id + 1) % compact_every == 0) or (
-            compact_files_per_bucket
-            and max_files_per_bucket(spark, f"{store_path}/lines")
-            > compact_files_per_bucket
-        ):
-            compact_store(spark, store_path, n_buckets)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

@@ -23,7 +23,7 @@ by watermarks; a dedup corpus is forever).  At scale the store would
 be bucketed by band hash so step 2's join is shuffle-free on the store
 side.
 
-Restart safety follows `to_rollup_store_sink`'s epoch-marker idiom:
+Restart safety is streaming/pipeline.py's ``_replay_safe_sink``:
 replayed epochs are skipped via marker files.  The two appends
 (signatures, then matches) are individually non-atomic, so the crash
 windows are: (a) after signatures, before matches — replay re-derives
@@ -48,14 +48,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kafkastreamsproject_spark.storeconfig import DEFAULTS
 from kafkastreamsproject_spark.functions import hashing as H
 from kafkastreamsproject_spark.functions import text as TX
 from kafkastreamsproject_spark.operators.fs import (
-    hadoop_exists,
+    _fs_and_path,
     hadoop_has_files,
-    hadoop_touch,
+    hadoop_swap_dir,
 )
+from kafkastreamsproject_spark.streaming.pipeline import _replay_safe_sink
 
 SHINGLE_W = 5
 N_BANDS = 4  # 8 perms → 4 bands of 2 rows
@@ -243,14 +243,12 @@ def compact_store(
     long-running ingest accumulates thousands of tiny files and the
     per-batch store scan becomes metadata-bound (the classic streaming
     small-files failure).  This maintenance op rewrites the store at
-    ~``target_file_bytes`` per file and swaps it in via two Hadoop FS
-    renames.  Returns the number of files after compaction.
+    ~``target_file_bytes`` per file and swaps it in with
+    operators/fs.py:hadoop_swap_dir.  Returns the number of files after
+    compaction.
 
     Contract: single-writer — run between epochs (the ingest loop is a
-    sequential foreachBatch, so any pause point is safe); the rename
-    swap is atomic on HDFS/local FS, and on rename-less object stores
-    the same sequence degrades to copy+delete with a visible-but-
-    consistent intermediate (both generations hold identical rows).
+    sequential foreachBatch, so any pause point is safe).
     """
     import math
 
@@ -263,14 +261,7 @@ def compact_store(
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     tmp = f"{store_path}/signatures_compacting"
     store.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    old = f"{store_path}/signatures_old"
-    _, old_p = _fs_and_path(spark, old)
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    _, tmp_p = _fs_and_path(spark, tmp)
-    fs.rename(src, old_p)
-    fs.rename(tmp_p, src)
-    fs.delete(old_p, True)
+    hadoop_swap_dir(spark, sig_path, tmp)
     return n_files
 
 
@@ -383,54 +374,25 @@ def dedup_shard_against_store(
     return verdicts
 
 
-def _fs_and_path(spark: SparkSession, path: str):
-    from kafkastreamsproject_spark.operators.fs import _fs_and_path as fp
-
-    return fp(spark, path)
-
-
 def to_neardup_ingest_sink(
-    docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_every: int | None = None,
-    compact_files: int | None = DEFAULTS.compact_files_plain,
+    docs: DataFrame, store_path: str, checkpoint: str
 ) -> StreamingQuery:
     """Streaming dedup-at-ingest: fold each micro-batch of documents
-    (doc_id, text, ...) through :func:`ingest_batch`.
-
-    Compaction cadence is ADAPTIVE by default (r12 verdict #6): after
-    each applied fold, if the signature append log has accumulated
-    more than ``compact_files`` data files, :func:`compact_store` runs
-    — inside the sequential foreachBatch loop, so the single-writer
-    contract holds by construction and the file count stays bounded
-    on a long-running ingest whatever the epoch pattern (the store is
-    a plain parquet append log, so the trigger counts files, not
-    files-per-bucket).  ``compact_every=N`` remains as an explicit
-    fixed cadence (either trigger fires)."""
-    from kafkastreamsproject_spark.operators.fs import hadoop_count_files
-
-    markers = f"{store_path}/_applied_epochs"
-    applied = {"n": 0}
-
-    def _fold(batch: DataFrame, epoch_id: int) -> None:
-        marker = f"{markers}/{epoch_id}.done"
-        spark = batch.sparkSession
-        if hadoop_exists(spark, marker):
-            return  # replayed epoch: already folded into the store
-        ingest_batch(batch, store_path)
-        hadoop_touch(spark, marker)
-        applied["n"] += 1
-        if (compact_every and applied["n"] % compact_every == 0) or (
-            compact_files
-            and hadoop_count_files(spark, f"{store_path}/signatures")
-            > compact_files
-        ):
-            compact_store(spark, store_path)
-
-    return (
-        docs.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    (doc_id, text, ...) through :func:`ingest_batch` via
+    streaming/pipeline.py's :func:`_replay_safe_sink`.  Replayed epochs
+    are skipped, and once the signature append log passes the
+    storeconfig ``compact_files_plain`` file count :func:`compact_store`
+    runs — inside the sequential foreachBatch loop, so the
+    single-writer contract holds by construction (the store is a plain
+    parquet append log, so the trigger counts files, not
+    files-per-bucket)."""
+    return _replay_safe_sink(
+        docs,
+        store_path,
+        checkpoint,
+        lambda batch: ingest_batch(batch, store_path),
+        available_now=True,
+        compact=lambda spark: compact_store(spark, store_path),
+        compact_probe=f"{store_path}/signatures",
+        per_bucket=False,
     )

@@ -107,8 +107,9 @@ def compact_store(
 def novelty_ingest_batch(
     batch: DataFrame, store_path: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
-    """One fold of the novelty-at-ingest loop (the foreachBatch body,
-    exposed for tests and backfills).
+    """One fold of the novelty-at-ingest loop, one call per arriving
+    shard (a stream would run it per epoch through streaming/pipeline.py's
+    ``_replay_safe_sink``).
 
     Returns per-document stats ``(doc_id, n_trigrams, n_novel,
     novelty)`` where a trigram is novel iff it is absent from the
@@ -163,42 +164,3 @@ def novelty_ingest_batch(
             ["h"], n_buckets,
         )
     return stats
-
-
-def to_novelty_ingest_sink(
-    docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    out_table: str,
-    compact_every: int | None = None,
-    n_buckets: int = N_BUCKETS,
-    compact_files_per_bucket: int | None = DEFAULTS.compact_files_per_bucket,
-):
-    """Streaming form: fold each micro-batch through
-    :func:`novelty_ingest_batch` and collect per-doc stats into a
-    global temp view (test double for a metrics sink).  Compaction
-    cadence is ADAPTIVE by default (r12 verdict #6): when any bucket
-    of the trigram store exceeds ``compact_files_per_bucket`` data
-    files, the store compacts between folds; ``compact_every=k``
-    remains as an explicit fixed cadence (either trigger fires)."""
-    from kafkastreamsproject_spark.sources.bucketed import (
-        max_files_per_bucket,
-    )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        stats = novelty_ingest_batch(batch_df, store_path, n_buckets)
-        stats.createOrReplaceGlobalTempView(out_table)
-        spark = batch_df.sparkSession
-        if (compact_every and (epoch_id + 1) % compact_every == 0) or (
-            compact_files_per_bucket
-            and max_files_per_bucket(spark, f"{store_path}/trigrams")
-            > compact_files_per_bucket
-        ):
-            compact_store(spark, store_path, n_buckets)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

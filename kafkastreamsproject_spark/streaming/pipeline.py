@@ -25,12 +25,22 @@ with exactly-once epochs.
 
 from __future__ import annotations
 
+import json
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kafkastreamsproject_spark import storeconfig
+from kafkastreamsproject_spark.operators.fs import (
+    hadoop_count_files,
+    hadoop_exists,
+    hadoop_read_text,
+    hadoop_touch,
+)
 from kafkastreamsproject_spark.operators.joins import enrich_trips
+from kafkastreamsproject_spark.sources.bucketed import max_files_per_bucket
 
 
 def daily_agg_stream(
@@ -161,6 +171,77 @@ def to_full_store_sink(
     return w.start()
 
 
+def _replay_safe_sink(
+    stream: DataFrame,
+    store_path: str,
+    checkpoint: str,
+    fold: Callable[[DataFrame], object],
+    *,
+    available_now: bool,
+    compact: Callable[[SparkSession], object] | None = None,
+    compact_probe: str | None = None,
+    per_bucket: bool = True,
+) -> StreamingQuery:
+    """The one exactly-once ``foreachBatch`` fold every persistent store
+    streams through (Structured Streaming's rule: a replayable source
+    plus a sink that is idempotent per epoch).  Per epoch, in order:
+
+    1. skip the epoch if its marker exists — the engine replays an
+       uncommitted epoch after a crash, and re-applying a fold would
+       double-count;
+    2. run ``fold(batch)``;
+    3. write the marker ``<store>/_applied_epochs/<query id>_<epoch>.done``
+       only after the fold returned, so a fold that raises leaves no
+       marker and the restart folds that epoch again;
+    4. if ``compact`` is given and the store at ``compact_probe`` is
+       over the ``storeconfig.DEFAULTS`` threshold — more than
+       ``compact_files_per_bucket`` files in any bucket
+       (``per_bucket``) or ``compact_files_plain`` files in total —
+       run ``compact(spark)`` (between folds: single-writer window).
+
+    Markers carry the query id Spark keeps in ``<checkpoint>/metadata``:
+    epoch ids restart at 0 under a fresh checkpoint, so markers keyed
+    by epoch alone would make a new query over an existing store skip
+    its first epochs.  The id survives restarts from the same checkpoint,
+    which is the replay the markers guard.  Markers go through the
+    Hadoop FS (operators/fs.py), so the store may be a remote URI.
+
+    The crash window between the fold's commit and the marker write is
+    the documented at-least-once residue; closing it needs an atomically
+    committing table format (Delta/Iceberg), which is exactly what those
+    formats' transaction logs exist for.
+    """
+    query: dict[str, str] = {}
+
+    def _apply(batch: DataFrame, epoch_id: int) -> None:
+        spark = batch.sparkSession
+        if not query:
+            meta = hadoop_read_text(spark, f"{checkpoint}/metadata")
+            query["id"] = json.loads(meta)["id"]
+        marker = f"{store_path}/_applied_epochs/{query['id']}_{epoch_id}.done"
+        if hadoop_exists(spark, marker):
+            return  # replayed epoch: already folded into the store
+        fold(batch)
+        hadoop_touch(spark, marker)
+        if compact is None:
+            return
+        if per_bucket:
+            files = max_files_per_bucket(spark, compact_probe)
+            limit = storeconfig.DEFAULTS.compact_files_per_bucket
+        else:
+            files = hadoop_count_files(spark, compact_probe)
+            limit = storeconfig.DEFAULTS.compact_files_plain
+        if files > limit:
+            compact(spark)
+
+    writer = stream.writeStream.foreachBatch(_apply).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def to_rollup_store_sink(
     trips: DataFrame,
     stations: DataFrame,
@@ -173,33 +254,21 @@ def to_rollup_store_sink(
     persistent, queryable mid-stream via ``finalize_rollup``.
 
     ``foreachBatch`` hands us the micro-batch as a plain DataFrame, so
-    the batch enrich + the store merge run unchanged.  Restart safety:
-    Structured Streaming replays an uncommitted epoch after a crash, and
-    a re-applied fold would double-count — so each epoch writes a marker
-    under ``<store>/_applied_epochs`` and replayed epochs are skipped.
-    The crash window between merge-commit and marker-write is the
-    documented at-least-once residue; closing it needs an atomically
-    committing table format (Delta/Iceberg), which is exactly what those
-    formats' transaction logs exist for.
+    the batch enrich + the store merge run unchanged, through
+    :func:`_replay_safe_sink` (a replayed epoch is skipped, so the
+    additive store never double-counts).  Each fold overwrites the day
+    partitions it touches instead of appending, so the store has no
+    small-file pile-up to compact.
     """
     from kafkastreamsproject_spark.operators.incremental import (
         merge_daily_rollup,
     )
 
-    from kafkastreamsproject_spark.operators.fs import hadoop_exists, hadoop_touch
-
-    markers = f"{store_path}/_applied_epochs"
-
-    def _fold(batch: DataFrame, epoch_id: int) -> None:
-        # Hadoop FS markers (not pathlib): the store may be a remote URI.
-        marker = f"{markers}/{epoch_id}.done"
-        if hadoop_exists(batch.sparkSession, marker):
-            return  # replayed epoch: already folded into the store
-        enriched = enrich_trips(batch, stations, on_miss="drop")
+    def _fold(batch: DataFrame) -> None:
         merge_daily_rollup(
             batch.sparkSession,
             store_path,
-            enriched,
+            enrich_trips(batch, stations, on_miss="drop"),
             key_alias="stationName",
             key_col="stationName",
             time_col="tripTime",
@@ -207,13 +276,9 @@ def to_rollup_store_sink(
             type_col="tripType",
             started_types=(1,),
         )
-        hadoop_touch(batch.sparkSession, marker)
 
-    return (
-        trips.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _replay_safe_sink(
+        trips, store_path, checkpoint, _fold, available_now=True
     )
 
 

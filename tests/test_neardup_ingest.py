@@ -187,10 +187,16 @@ def test_banded_store_probe_matches_and_avoids_store_shuffle(spark, tmp_path):
 
 
 @pytest.mark.slowsuite  # r16: slowest-tail; deselected by default (pyproject addopts), run via -m slowsuite
-def test_sink_with_periodic_compaction_matches_uncompacted(spark, tmp_path):
-    """compact_every wired into the sink: same signatures and verdicts
-    as an uncompacted run, fewer store files."""
+def test_sink_with_periodic_compaction_matches_uncompacted(
+    spark, tmp_path, monkeypatch
+):
+    """The sink's compaction trigger, with the storeconfig plain-store
+    threshold lowered to one file so it fires between folds: same
+    signatures and verdicts as an uncompacted run, fewer store files."""
+    import dataclasses
     import glob
+
+    from kafkastreamsproject_spark import storeconfig
 
     data_dir = tmp_path / "cstream"
     data_dir.mkdir()
@@ -198,16 +204,20 @@ def test_sink_with_periodic_compaction_matches_uncompacted(spark, tmp_path):
         _docs(spark, rows).coalesce(1).write.parquet(str(data_dir / f"chunk{i}"))
 
     stores = {}
-    for label, every in (("plain", None), ("compacted", 2)):
+    plain_limit = storeconfig.DEFAULTS.compact_files_plain
+    for label, limit in (("plain", plain_limit), ("compacted", 1)):
+        monkeypatch.setattr(
+            storeconfig,
+            "DEFAULTS",
+            dataclasses.replace(storeconfig.DEFAULTS, compact_files_plain=limit),
+        )
         store = str(tmp_path / f"store_{label}")
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(str(data_dir / "*"))
         )
-        q = to_neardup_ingest_sink(
-            stream, store, str(tmp_path / f"ckpt_{label}"), compact_every=every
-        )
+        q = to_neardup_ingest_sink(stream, store, str(tmp_path / f"ckpt_{label}"))
         q.awaitTermination()
         stores[label] = {
             "sigs": sorted(

@@ -16,7 +16,6 @@ import pytest
 from kafkastreamsproject_spark.schemas import STATION
 from kafkastreamsproject_spark.streaming.pipeline import daily_agg_stream, to_memory_sink
 from kafkastreamsproject_spark.streaming.punctuate import punctuated_daily_agg
-from kafkastreamsproject_spark.streaming.punctuate_v2 import punctuated_daily_agg_v2
 from kafkastreamsproject_spark.streaming.replay import write_trip_chunk
 from kafkastreamsproject_spark.streaming.sources import trip_file_stream
 
@@ -57,41 +56,14 @@ def test_daily_agg_stream_on_rocksdb(spark, tmp_path):
     assert r.avgTemperature == pytest.approx(12.0)
 
 
-try:  # TWS's state-server protocol needs protobuf at RUNTIME (worker side)
-    import google.protobuf  # noqa: F401
-
-    _HAS_PROTOBUF = True
-except ImportError:  # pragma: no cover - absent in this container
-    _HAS_PROTOBUF = False
-
-
 @pytest.mark.parametrize(
-    "op",
-    [
-        punctuated_daily_agg,
-        pytest.param(
-            punctuated_daily_agg_v2,
-            marks=pytest.mark.skipif(
-                not _HAS_PROTOBUF,
-                reason=(
-                    "transformWithStateInPandas drives its state client "
-                    "over a protobuf protocol; google.protobuf is not "
-                    "installed in this container (no network, no pip) — "
-                    "the test runs unmodified the moment it is"
-                ),
-            ),
-        ),
-    ],
-    ids=["applyInPandasWithState", "transformWithStateInPandas"],
+    "op", [punctuated_daily_agg], ids=["applyInPandasWithState"]
 )
 def test_punctuated_daily_agg_on_rocksdb(spark, tmp_path, op):
     """The faithful-punctuation operator (T2) exercised on the
-    scale-targeted state backend in BOTH stateful APIs — the portable
-    applyInPandasWithState default and the Spark-4
-    transformWithStateInPandas successor (punctuate_v2; RocksDB-only by
-    design) — custom state encoding, timer registration, and eviction
-    all pass through the RocksDB provider, not just the built-in agg's
-    state.  Both must emit identical aggregates."""
+    scale-targeted state backend — custom state encoding, timer
+    registration, and eviction all pass through the RocksDB provider,
+    not just the built-in agg's state."""
     stations = spark.createDataFrame(
         [(168, "Michigan Ave", 24, 20, "In Service", 41.88, -87.62, "P")],
         STATION,

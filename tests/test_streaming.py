@@ -528,6 +528,61 @@ def test_rollup_store_sink_matches_batch_and_is_restart_safe(
     assert read_store() == got
 
 
+def test_rollup_store_sink_refolds_epoch_whose_fold_raised(
+    spark, stations, tmp_path, monkeypatch
+):
+    """Crash window of the replay-safe sink: a fold that raises leaves
+    no epoch marker, and a restart from the same checkpoint folds that
+    epoch exactly once — the additive rollup store would show a double
+    fold in its counts."""
+    import os
+
+    from kafkastreamsproject_spark.operators import incremental
+    from kafkastreamsproject_spark.streaming.pipeline import to_rollup_store_sink
+
+    data_dir = str(tmp_path / "replay_crash")
+    write_trip_chunk(data_dir, _DAY1, 0)
+    store = tmp_path / "rollup_store"
+    ckpt = str(tmp_path / "ckpt_crash")
+
+    real_merge = incremental.merge_daily_rollup
+    calls = []
+
+    def merge_failing_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected fold failure")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(incremental, "merge_daily_rollup", merge_failing_once)
+
+    def drain():
+        stream = trip_file_stream(spark, data_dir)
+        to_rollup_store_sink(stream, stations, str(store), ckpt).awaitTermination()
+
+    def markers():
+        d = store / "_applied_epochs"
+        return [f for f in os.listdir(d) if not f.startswith(".")] if d.exists() else []
+
+    with pytest.raises(Exception, match="injected fold failure"):
+        drain()
+    assert markers() == []
+
+    drain()
+    assert len(calls) == 2
+    assert len(markers()) == 1
+    got = {
+        (r.stationName, r.event_day): (r.started_events, r.ended_events)
+        for r in incremental.finalize_rollup(
+            spark, str(store), key_alias="stationName"
+        ).collect()
+    }
+    assert got == {
+        ("Michigan Ave", "2024-03-01"): (1, 1),
+        ("Wabash Ave", "2024-03-01"): (2, 0),
+    }
+
+
 def test_stream_stream_event_pairs_across_batches(spark, tmp_path):
     """The events stream-stream interval join (shadow query
     streaming_event_pairs' shape) must emit the COMPLETE pair set when
