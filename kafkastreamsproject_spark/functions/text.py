@@ -115,7 +115,7 @@ def quality_score(text: Column) -> Column:
     ``split(trim(text))`` ~8× per row (ttr, stopword ratio, avg length,
     and the len_ok branch each inline their own tokenization — lambdas
     and repeated column references defeat subexpression elimination).
-    :func:`let1` binds the token array, then the four scalar features,
+    :func:`let1` binds the token array, then the three scalar features,
     so the split and each feature run exactly once; the composite is
     the same expression tree over the same exact doubles."""
 

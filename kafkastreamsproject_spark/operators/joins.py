@@ -44,7 +44,21 @@ def broadcast_enrich(
     ``spark.sql.autoBroadcastJoinThreshold`` and falls back to a
     shuffled join beyond it.  Forcing a broadcast of a scaling table is
     the classic 100 TB OOM: correct at sf0.1, fatal at sf100.
+
+    Start-time snapshot: when ``fact`` is a stream and ``dim`` a bounded
+    static table, ``dim`` is collected here, once, when the topology is
+    built, and joined as a driver-local relation.  Each micro-batch then
+    broadcasts that snapshot from the driver, with no job over the
+    dimension's source; without it Spark re-evaluates the static side
+    on every micro-batch.  The query sees the dimension as it was when
+    the topology was built; rows added to its source later appear only
+    after the topology is built again (a restart).  The reference does
+    the same: it reads the station CSV once at consumer start-up
+    (KafkaConsumer.kt).  Batch facts and ``scaling`` dims keep their
+    plans and collect nothing.
     """
+    if fact.isStreaming and dim_size == "bounded":
+        dim = dim.sparkSession.createDataFrame(dim.toArrow())
     dimb = F.broadcast(dim) if dim_size == "bounded" else dim
     if on_miss == "drop":
         return fact.join(dimb, fact[fact_key] == dimb[dim_key], "inner")

@@ -11,13 +11,34 @@ so the same code runs unchanged on a multi-executor cluster:
   and oracle-comparable (DuckDB timestamps are UTC-naive).
 - Arrow enabled: every Pandas-UDF boundary is Arrow-batched, never
   row-at-a-time pickling.
+
+Two streaming rules live outside this factory, at query start:
+
+- **State width.** The topologies' stateful operators keep their state
+  in ``STATE_PARTITIONS`` (one) partition.  Their state is keyed by the
+  bounded station dimension times a time bucket the watermark bounds —
+  a few hundred rows at any input volume — so each extra partition only
+  adds a state-store commit per micro-batch.  The streaming sinks start
+  their queries inside :func:`shuffle_partitions_scoped`;
+  ``StreamExecution`` clones the session at ``start()``, and the offset
+  log then fixes the width for every restart (a checkpoint created at
+  another width keeps it).
+- **Station snapshot.** A streaming fact's bounded dimension is
+  collected once when the topology is built
+  (``operators/joins.py:broadcast_enrich``), so a micro-batch
+  broadcasts a driver-local table instead of re-scanning the source.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: shuffle width the streaming sinks start their queries with, which a
+#: new checkpoint keeps as its state-partition count (see module doc)
+STATE_PARTITIONS = 1
 
 
 #: Connector coordinates matched to the installed PySpark (4.x, Scala
@@ -67,3 +88,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def shuffle_partitions_scoped(spark: SparkSession, n: int):
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the scope and
+    restore the previous value on exit, also on error."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

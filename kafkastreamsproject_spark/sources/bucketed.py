@@ -13,9 +13,10 @@ shuffles).  Pick n_buckets so a bucket ≈ one task's worth of data
 from __future__ import annotations
 
 import hashlib
-from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kafkastreamsproject_spark.session import shuffle_partitions_scoped
 
 
 def materialize_bucketed(
@@ -57,7 +58,6 @@ def bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_contextmanager
 def shuffle_scoped_to_buckets(spark: SparkSession, n_buckets: int):
     """Pin ``spark.sql.shuffle.partitions`` to the store's bucket count
     for the scope — the conf contract a bucketed-store probe needs.
@@ -72,12 +72,7 @@ def shuffle_scoped_to_buckets(spark: SparkSession, n_buckets: int):
     store at least as wide as the ingest job's parallelism; this scope
     encodes the same invariant for the single-writer fold, where the
     batch-sized rollups are cheap at any width."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return shuffle_partitions_scoped(spark, n_buckets)
 
 
 #: sidecar file recording the bucket spec a store was CREATED with.

@@ -20,9 +20,10 @@ only change is the format string.
 Log layout: ``<path>/p<partition>-<seq>.jsonl`` — each line one JSON
 record ``{"key": ..., "value": ...}``; files are append-only segments,
 ordered per partition by the zero-padded ``seq``.  Offsets count
-RECORDS per partition (files are scanned and lines skipped up to the
-cursor — the simple reader's whole-log scan is fine for a test double;
-a production source would index segment start offsets).
+RECORDS per partition (files are listed and lines skipped up to the
+cursor; the reader keeps each parsed segment, so a poll parses only
+new or rewritten segments — a production source would also index
+segment start offsets).
 
 Scale/semantics notes: exactly-once delivery comes from Spark's offset
 log — read(start) is re-executed deterministically for a given start
@@ -45,6 +46,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from kafkastreamsproject_spark.schemas import TRIP
+from kafkastreamsproject_spark.session import (
+    STATE_PARTITIONS,
+    shuffle_partitions_scoped,
+)
 
 MOCK_BROKER_SCHEMA = (
     "partition INT, offset BIGINT, key STRING, value STRING, "
@@ -52,40 +57,58 @@ MOCK_BROKER_SCHEMA = (
 )
 
 
-def _scan(path: str) -> dict[int, list[tuple]]:
-    """Full per-partition record lists (ts, key, value), in log order.
+def _parse_segment(f: Path) -> list[tuple]:
+    """One segment's records (ts, key, value), in log order.
 
     Timestamps parse with an EXPLICIT UTC zone (ADVICE r7): epoch
     seconds must mean the same instant on every machine — the host's
     local zone never participates."""
     import datetime as dt
 
+    out = []
+    for line in f.read_text().splitlines():
+        if not line.strip():
+            continue
+        rec = json.loads(line)
+        ts = dt.datetime.fromtimestamp(rec.get("ts_epoch", 0.0), tz=dt.timezone.utc)
+        out.append((ts, rec.get("key"), rec["value"]))
+    return out
+
+
+def _scan(path: str, parsed: dict | None = None) -> dict[int, list[tuple]]:
+    """Full per-partition record lists (ts, key, value), in log order.
+
+    ``parsed`` keeps each segment's records under its file name with
+    the file's (size, mtime_ns), so a poll parses only the segments
+    that are new or changed: appends add files, and a replayed epoch
+    rewrites its segment in place (``to_mock_topic_sink``), which
+    changes that key."""
+    parsed = {} if parsed is None else parsed
     logs: dict[int, list[tuple]] = {}
     for f in sorted(Path(path).glob("p*-*.jsonl")):
         part = int(f.name.split("-")[0][1:])
-        for line in f.read_text().splitlines():
-            if not line.strip():
-                continue
-            rec = json.loads(line)
-            ts = dt.datetime.fromtimestamp(
-                rec.get("ts_epoch", 0.0), tz=dt.timezone.utc
-            )
-            logs.setdefault(part, []).append(
-                (ts, rec.get("key"), rec["value"])
-            )
+        st = f.stat()
+        key = (st.st_size, st.st_mtime_ns)
+        hit = parsed.get(f.name)
+        if hit is None or hit[0] != key:
+            hit = parsed[f.name] = (key, _parse_segment(f))
+        if hit[1]:
+            logs.setdefault(part, []).extend(hit[1])
     return logs
 
 
 class MockBrokerStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict) -> None:
         self._path = options["path"]
+        # parsed segments, kept across polls (see _scan)
+        self._parsed: dict[str, tuple] = {}
 
     def initialOffset(self) -> dict:
         # earliest — the reference's cleanUp()-then-start behavior (T6)
-        return {str(p): 0 for p in _scan(self._path)} or {"0": 0}
+        return {str(p): 0 for p in _scan(self._path, self._parsed)} or {"0": 0}
 
     def read(self, start: dict):
-        logs = _scan(self._path)
+        logs = _scan(self._path, self._parsed)
         end = {str(p): len(rows) for p, rows in logs.items()}
         for p in start:
             end.setdefault(p, start[p])
@@ -93,7 +116,7 @@ class MockBrokerStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._between(_scan(self._path), start, end))
+        return iter(self._between(_scan(self._path, self._parsed), start, end))
 
     @staticmethod
     def _between(logs: dict, start: dict, end: dict) -> list[tuple]:
@@ -230,9 +253,12 @@ def to_mock_topic_sink(
         for p in range(n_partitions):
             append_segment(topic_path, p, int(epoch_id), by_part.get(p, []))
 
-    return (
+    w = (
         df.writeStream.outputMode(output_mode)
         .foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
-        .start()
     )
+    # the topologies' state width (session.py); a restart keeps the
+    # width its checkpoint was created with
+    with shuffle_partitions_scoped(df.sparkSession, STATE_PARTITIONS):
+        return w.start()

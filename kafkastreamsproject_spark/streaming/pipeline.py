@@ -21,6 +21,13 @@ append mode after the watermark closes each window.
 Checkpointing (T3): every query takes a ``checkpoint`` path; micro-batch
 commit replaces the reference's ``commit.interval.ms=0`` eager commits
 with exactly-once epochs.
+
+State width: the sinks below start their queries with
+``session.STATE_PARTITIONS`` (one) shuffle partition, which a new
+checkpoint keeps as its state-partition count (see session.py).
+``_replay_safe_sink`` does not: its folds run on the stream's cloned
+session, so their shuffles keep the session width and any bucket
+scope.
 """
 
 from __future__ import annotations
@@ -40,6 +47,10 @@ from kafkastreamsproject_spark.operators.fs import (
     hadoop_touch,
 )
 from kafkastreamsproject_spark.operators.joins import enrich_trips
+from kafkastreamsproject_spark.session import (
+    STATE_PARTITIONS,
+    shuffle_partitions_scoped,
+)
 from kafkastreamsproject_spark.sources.bucketed import max_files_per_bucket
 
 
@@ -128,14 +139,15 @@ def to_memory_sink(
     output_mode: str = "update",
 ) -> StreamingQuery:
     """S8 stand-in for tests: memory sink, availableNow trigger."""
-    return (
+    w = (
         df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .start()
     )
+    with shuffle_partitions_scoped(df.sparkSession, STATE_PARTITIONS):
+        return w.start()
 
 
 def to_full_store_sink(
@@ -168,7 +180,8 @@ def to_full_store_sink(
         w = w.trigger(availableNow=True)
     else:
         w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
+    with shuffle_partitions_scoped(df.sparkSession, STATE_PARTITIONS):
+        return w.start()
 
 
 def _replay_safe_sink(
@@ -286,12 +299,13 @@ def to_console_sink(
     df: DataFrame, checkpoint: str, output_mode: str = "update"
 ) -> StreamingQuery:
     """S8: the reference's foreach-println terminal operator."""
-    return (
+    w = (
         df.writeStream.outputMode(output_mode)
         .format("console")
         .option("checkpointLocation", checkpoint)
-        .start()
     )
+    with shuffle_partitions_scoped(df.sparkSession, STATE_PARTITIONS):
+        return w.start()
 
 
 def to_kafka_sink(
@@ -307,14 +321,15 @@ def to_kafka_sink(
     payload = df.select(
         F.to_json(F.struct(*df.columns)).alias("value")
     )
-    return (
+    w = (
         payload.writeStream.outputMode(output_mode)
         .format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
-        .start()
     )
+    with shuffle_partitions_scoped(df.sparkSession, STATE_PARTITIONS):
+        return w.start()
 
 
 def session_stream(
@@ -359,11 +374,12 @@ def to_parquet_sink(
     files through the checkpointed metadata log, so replayed batches
     after failure never double-write (the engine's replacement for the
     reference's eager commit.interval.ms=0, T3)."""
-    return (
+    w = (
         df.writeStream.outputMode(output_mode)
         .format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .start()
     )
+    with shuffle_partitions_scoped(df.sparkSession, STATE_PARTITIONS):
+        return w.start()

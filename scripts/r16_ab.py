@@ -11,10 +11,13 @@ JVM, results asserted IDENTICAL at sf0.1 before anything is timed.
 
 Covers: simhash_neardup (Hamming filter pushed below the distinct),
 ngram_jaccard_pairs (count-based intersection from the inverted
-index), tfidf_top_terms (persisted tf), order_existence_counts
+index), tfidf_top_terms (document frequency as a window count over
+the one tf relation, so the corpus is scanned once; a persisted-tf
+variant was measured slower and not shipped), order_existence_counts
 (single max-shipdate aggregate), lang_id_predict / quality_score
-(let1-bound token features), grouping_sets_revenue (coalesce guard —
-expected flat).
+(the token array let1-bound, so each row splits once; quality_score
+then binds its three scalar features once), grouping_sets_revenue
+(coalesce guard — expected flat).
 
 Writes /tmp/r16_ab.json and prints it.
 """

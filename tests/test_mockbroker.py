@@ -8,6 +8,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from kafkastreamsproject_spark.sources.mockbroker import (
@@ -543,3 +545,260 @@ def test_mock_sink_replay_truncates_stale_partition_segment(tmp_path):
     logs = _scan(log)
     assert [v for _, _, v in logs.get(0, [])] == ["v1", "v2"]
     assert logs.get(1, []) == []
+
+
+def test_reader_parses_each_segment_once_until_rewritten(tmp_path, monkeypatch):
+    """The reader keeps parsed segments across polls: an unchanged
+    segment is not parsed again, a new one is, and a segment rewritten
+    in place (a replayed epoch of to_mock_topic_sink) parses again and
+    shows its new records."""
+    from kafkastreamsproject_spark.sources import mockbroker
+
+    parsed = []
+    real = mockbroker._parse_segment
+    monkeypatch.setattr(
+        mockbroker, "_parse_segment", lambda f: parsed.append(f.name) or real(f)
+    )
+    log = str(tmp_path / "log")
+    append_segment(log, 0, 0, [_trip(1, 1, 168, 8)])
+    reader = mockbroker.MockBrokerStreamReader({"path": log})
+    _, end = reader.read({"0": 0})
+    assert end == {"0": 1} and parsed == ["p0-000000.jsonl"]
+
+    append_segment(log, 0, 1, [_trip(2, 0, 168, 9)])
+    _, end = reader.read(end)
+    assert end == {"0": 2}
+    assert parsed == ["p0-000000.jsonl", "p0-000001.jsonl"]
+
+    append_segment(log, 0, 1, [_trip(3, 0, 42, 9), _trip(4, 1, 42, 9)])
+    rows = list(reader.readBetweenOffsets({"0": 1}, {"0": 3}))
+    assert [json.loads(v)["id"] for _, _, _, v, _ in rows] == [3, 4]
+    assert parsed[2:] == ["p0-000001.jsonl"]
+
+
+_STATIONS = [
+    (168, "Michigan Ave", 24, 20, "In Service", 41.88, -87.62, "P"),
+    (42, "Wabash Ave", 10, 10, "In Service", 41.89, -87.63, "P"),
+]
+
+
+def _station_df(spark):
+    from kafkastreamsproject_spark.schemas import STATION
+
+    return spark.createDataFrame(_STATIONS, STATION)
+
+
+def _state_widths(q) -> set[int]:
+    return {
+        op.numShufflePartitions
+        for p in q.recentProgress
+        for op in p.stateOperators
+    }
+
+
+def _sunk_values(path: str) -> list[str]:
+    import pathlib
+
+    return sorted(
+        json.loads(line)["value"]
+        for f in pathlib.Path(path).glob("p*-*.jsonl")
+        for line in f.read_text().splitlines()
+        if line.strip()
+    )
+
+
+def test_topologies_keep_state_in_one_partition(spark, tmp_path):
+    """Both topologies, started through to_mock_topic_sink, keep every
+    stateful operator in one state partition, whatever the session's
+    shuffle width, and the session's width is restored after start."""
+    from kafkastreamsproject_spark.sources.mockbroker import to_mock_topic_sink
+    from kafkastreamsproject_spark.streaming.pipeline import (
+        daily_agg_stream,
+        windowed_anomaly_stream,
+    )
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert width != "1"
+    log = str(tmp_path / "input-topic")
+    append_segment(log, 0, 0, [_trip(1, 1, 168, 8), _trip(2, 1, 42, 10)])
+    append_segment(log, 1, 0, [_trip(3, 0, 168, 9), _trip(4, 1, 42, 10)])
+    trips = mock_trip_stream(spark, log)
+    stations = _station_df(spark)
+    queries = [
+        to_mock_topic_sink(
+            daily_agg_stream(trips, stations),
+            str(tmp_path / "etl-topic"),
+            str(tmp_path / "ck-t1"),
+            key_col="stationName",
+        ),
+        to_mock_topic_sink(
+            windowed_anomaly_stream(trips, stations),
+            str(tmp_path / "anomalies-topic"),
+            str(tmp_path / "ck-t2"),
+            key_col="stationName",
+            output_mode="append",
+        ),
+    ]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    try:
+        for q in queries:
+            q.processAllAvailable()
+            assert _state_widths(q) == {1}
+    finally:
+        for q in queries:
+            q.stop()
+
+
+def test_restart_keeps_the_state_width_of_its_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint created at the session's width keeps that width when
+    the query restarts through to_mock_topic_sink: Spark restores it from
+    the offset log, so the restored state lines up.  The restarted run
+    emits exactly the rows of a run that never restarted."""
+    import os
+
+    from kafkastreamsproject_spark.sources import mockbroker
+    from kafkastreamsproject_spark.streaming.pipeline import daily_agg_stream
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width != 1
+    part1 = [_trip(1, 1, 168, 8), _trip(2, 0, 42, 9), _trip(3, 1, 42, 9)]
+    part2 = [_trip(4, 0, 168, 10), _trip(5, 1, 42, 11), _trip(6, 1, 7, 11)]
+    stations = _station_df(spark)
+
+    def append(log: str, seq: int, records: list) -> None:
+        # whole segments only: a poll must not split a part in two
+        staging = f"{log}-staging"
+        append_segment(staging, 0, seq, records)
+        name = f"p0-{seq:06d}.jsonl"
+        os.makedirs(log, exist_ok=True)
+        os.replace(f"{staging}/{name}", f"{log}/{name}")
+
+    def start(tag: str):
+        trips = mock_trip_stream(spark, str(tmp_path / f"{tag}-in"))
+        return mockbroker.to_mock_topic_sink(
+            daily_agg_stream(trips, stations),
+            str(tmp_path / f"{tag}-out"),
+            str(tmp_path / f"{tag}-ck"),
+            key_col="stationName",
+        )
+
+    # never restarted
+    append(str(tmp_path / "once-in"), 0, part1)
+    q = start("once")
+    try:
+        q.processAllAvailable()
+        append(str(tmp_path / "once-in"), 1, part2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    # first run at the session's width, as a checkpoint written before
+    # the sinks fixed the state width
+    append(str(tmp_path / "restart-in"), 0, part1)
+    with monkeypatch.context() as m:
+        m.setattr(mockbroker, "STATE_PARTITIONS", width)
+        q = start("restart")
+    try:
+        q.processAllAvailable()
+        assert _state_widths(q) == {width}
+    finally:
+        q.stop()
+    append(str(tmp_path / "restart-in"), 1, part2)
+    q = start("restart")
+    try:
+        q.processAllAvailable()
+        assert _state_widths(q) == {width}
+    finally:
+        q.stop()
+
+    once = _sunk_values(str(tmp_path / "once-out"))
+    assert len(once) == 4  # two keys from part 1, both updated by part 2
+    assert _sunk_values(str(tmp_path / "restart-out")) == once
+
+
+@pytest.mark.parametrize("on_miss", ["drop", "null", "error"])
+def test_stream_enrich_joins_a_station_snapshot(spark, tmp_path, on_miss):
+    """A stream enriched against stations built with createDataFrame(list)
+    joins a driver-local snapshot (a LocalRelation, not the Python-RDD
+    scan Spark would re-run every micro-batch), with the rows of a
+    plain-Python join under every miss policy."""
+    from kafkastreamsproject_spark.operators.joins import enrich_trips
+    from kafkastreamsproject_spark.streaming.pipeline import to_memory_sink
+
+    known = [_trip(1, 1, 168, 8), _trip(2, 0, 42, 9), _trip(3, 1, 42, 10)]
+    unknown = [_trip(4, 1, 7, 11)]
+    records = known if on_miss == "error" else known + unknown
+    log = str(tmp_path / "log")
+    append_segment(log, 0, 0, records)
+    enriched = enrich_trips(
+        mock_trip_stream(spark, log), _station_df(spark), on_miss=on_miss
+    )
+    plan = enriched._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+
+    q = to_memory_sink(
+        enriched.select("tripId", "stationId", "stationName"),
+        f"snap_{on_miss}",
+        str(tmp_path / "ck"),
+        output_mode="append",
+    )
+    q.processAllAvailable()
+    q.stop()
+    got = sorted(tuple(r) for r in spark.sql(f"SELECT * FROM snap_{on_miss}").collect())
+    names = {sid: name for sid, name, *_ in _STATIONS}
+    want = sorted(
+        (doc["id"], doc["stationId"], names.get(doc["stationId"]))
+        for doc in (json.loads(r["value"]) for r in records)
+        if doc["stationId"] in names or on_miss == "null"
+    )
+    assert got == want
+
+
+def test_stream_enrich_error_mode_raises_on_unknown_station(spark, tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    from kafkastreamsproject_spark.operators.joins import enrich_trips
+    from kafkastreamsproject_spark.streaming.pipeline import to_memory_sink
+
+    log = str(tmp_path / "log")
+    append_segment(log, 0, 0, [_trip(1, 1, 168, 8), _trip(2, 1, 7, 9)])
+    enriched = enrich_trips(mock_trip_stream(spark, log), _station_df(spark))
+    q = to_memory_sink(enriched, "snap_raise", str(tmp_path / "ck"), "append")
+    try:
+        with pytest.raises(StreamingQueryException, match="No such"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_batch_enrich_keeps_its_dimension_plan(spark, tmp_path):
+    """A batch fact keeps the dimension's own plan, and building the
+    join runs no job (no snapshot collect); only a stream build does."""
+    from kafkastreamsproject_spark.operators.joins import enrich_trips
+    from kafkastreamsproject_spark.schemas import TRIP
+
+    sc = spark.sparkContext
+    stations = _station_df(spark)
+    fact = spark.createDataFrame(
+        [(1, 1, dt.datetime(2024, 3, 1, 8), 168, 1.0, "S", "M", 9, 1.0, "c")],
+        TRIP,
+    )
+
+    def jobs_to_build(group: str, trips):
+        sc.setJobGroup(group, "plan build")
+        try:
+            df = enrich_trips(trips, stations)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, sc.statusTracker().getJobIdsForGroup(group)
+
+    batch, jobs = jobs_to_build("enrich-batch", fact)
+    assert jobs == []
+    plan = batch._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" in plan and "LocalRelation" not in plan
+    assert [r.stationName for r in batch.collect()] == ["Michigan Ave"]
+
+    _, jobs = jobs_to_build("enrich-stream", mock_trip_stream(spark, str(tmp_path)))
+    assert jobs  # the snapshot is collected when the topology is built
