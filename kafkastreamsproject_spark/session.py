@@ -27,6 +27,10 @@ Two streaming rules live outside this factory, at query start:
   collected once when the topology is built
   (``operators/joins.py:broadcast_enrich``), so a micro-batch
   broadcasts a driver-local table instead of re-scanning the source.
+
+Relations the package builds from driver-side values (an absent
+store's empty relation, the BM25 corpus-stats row) come from
+:func:`local_rows`, which Spark evaluates in its JVM engine.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: shuffle width the streaming sinks start their queries with, which a
 #: new checkpoint keeps as its state-partition count (see module doc)
@@ -100,3 +104,23 @@ def shuffle_partitions_scoped(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def local_rows(spark: SparkSession, schema: str, rows=()) -> DataFrame:
+    """``rows`` (tuples in the column order of the DDL ``schema``; none
+    by default) as a relation Spark evaluates in its JVM engine: one
+    JSON literal, parsed and exploded over a one-row range.
+    ``createDataFrame(list)`` plans a Python RDD instead, and each of
+    its evaluations runs one Python-worker task per partition, even
+    for zero rows; on a serving read or a fold that task set-up, not
+    the data, is the cost."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, StructType
+
+    struct = StructType.fromDDL(schema)
+    payload = json.dumps([dict(zip(struct.names, r)) for r in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.from_json(F.lit(payload), ArrayType(struct)))
+    )

@@ -16,7 +16,10 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kafkastreamsproject_spark.session import shuffle_partitions_scoped
+from kafkastreamsproject_spark.session import (
+    local_rows,
+    shuffle_partitions_scoped,
+)
 
 
 def materialize_bucketed(
@@ -173,7 +176,7 @@ def read_bucketed_store(
             spark.sql(f"REFRESH TABLE {table_name}")
             return spark.table(table_name)
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, schema)
     if has_files:
         cluster = ", ".join(bucket_cols)
         spark.sql(
@@ -182,7 +185,7 @@ def read_bucketed_store(
             f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
         )
         return spark.table(table_name)
-    return spark.createDataFrame([], schema)
+    return local_rows(spark, schema)
 
 
 def append_bucketed_store(
@@ -445,7 +448,7 @@ def merge_upsert_in_store(
     old_rows = (
         spark.read.schema(schema).parquet(*paths)
         if paths
-        else spark.createDataFrame([], schema)
+        else local_rows(spark, schema)
     )
     change_keys = changes.select(key_col).distinct()
     # matched counts BEFORE touching files (the change set is the CDC

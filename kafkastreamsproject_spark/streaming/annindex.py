@@ -211,6 +211,17 @@ def quantize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _query_snapshot(queries: DataFrame) -> DataFrame:
+    """The caller's query batch, quantized to ``(vec_id, qv)`` and
+    evaluated once: a read derives its probes, its ADC subvectors and
+    rerank's exact vectors from this snapshot, so the caller's
+    relation is evaluated once per call.  That relation is often a
+    ``createDataFrame(list)`` Python RDD, whose every evaluation runs
+    Python-worker tasks.  The batch is broadcast-bounded already (the
+    ADC join broadcasts its subvectors)."""
+    return quantize(queries).localCheckpoint(eager=True)
+
+
 def _subspaces(base: DataFrame, m_subspaces: int) -> DataFrame:
     """(vec_id, s, sv): ceil(dim/M) slices, the PQ subspace split."""
     sub_len = F.ceil(F.size("qv") / m_subspaces).cast("int")
@@ -893,8 +904,12 @@ def _pruned_to_probes(store_df: DataFrame, probes: DataFrame) -> DataFrame:
     NOT the scan: every store file is read and non-probed cells are
     discarded after the fact, an O(N)-bytes read per query batch that
     inverts the IVF contract at 10¹⁰ vectors.  The distinct probed
-    cells are driver-bounded (≤ |queries|·nprobe ≤ C ints; ``probes``
-    is already materialized and broadcast), and a literal IN on the
+    cells are driver-bounded (≤ |queries|·nprobe ≤ C ints).  Both
+    searches pass ``probes`` derived from the query snapshot
+    (:func:`_query_snapshot`) and checkpointed, so this collect reads
+    that checkpoint and re-evaluates neither the caller's queries nor
+    the probe assignment; the same relation is then broadcast into
+    the candidate join.  A literal IN on the
     clustering column both bucket-prunes the scan and row-group-skips
     inside the kept buckets (files are SORTED BY cell) — bytes read
     become ∝ probed cells, rows ≈ nprobe·√N under sized geometry.
@@ -1027,25 +1042,39 @@ def ann_query_index(
     ≈ nprobe·√N — the scan fraction SHRINKS as the corpus grows,
     where the old frozen C=8 pinned it at nprobe/8 of everything.
 
+    ``queries`` is evaluated once per call (:func:`_query_snapshot`).
+
     Returns (query_id, vec_id, cell, adc_dist2, rnk) — identical rows
     to plans/similarity.py:ivf_pq_search over the same corpus, which
     is exactly what the streaming_ann_index oracle asserts
     (``ann_filtered_topk`` asserts the filtered form)."""
     geo = check_ann_geometry(spark, store_path, geometry)
+    return _ann_topk(
+        spark, store_path, geo, _query_snapshot(queries), k, nprobe, allowed
+    )
+
+
+def _ann_topk(
+    spark: SparkSession,
+    store_path: str,
+    geo: dict,
+    qbase: DataFrame,
+    k: int,
+    nprobe: int,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """:func:`ann_query_index` over a :func:`_query_snapshot`."""
     n_buckets = geo["n_buckets"]
     coarse, cb = read_codebooks(spark, store_path)
-    qbase = quantize(queries)
-    # materialized once: the probe set feeds BOTH the scan-pruning
-    # cell collect below and the candidate equi-join — without the
+    # the probes are derived from the query snapshot and materialized
+    # once: they feed BOTH the scan-pruning cell collect in
+    # _pruned_to_probes and the candidate equi-join — without the
     # checkpoint the probe assignment (a |queries|·C window or Arrow
     # matmul) would run twice
     probes = _query_probes(
         spark, store_path, qbase, coarse, geo, nprobe
     ).localCheckpoint(eager=True)
-    qsub = _subspaces(
-        qbase.select(F.col("vec_id").alias("vec_id"), "qv"),
-        geo["m_subspaces"],
-    ).select(
+    qsub = _subspaces(qbase, geo["m_subspaces"]).select(
         F.col("vec_id").alias("query_id"), "s", F.col("sv").alias("qsv")
     )
 
@@ -1145,27 +1174,31 @@ def ann_rerank_index(
       quantized vectors — pytest-pinned; ``ann_rerank_sidecar``
       oracle-checks the sidecar path).
 
+    The query batch is evaluated once (:func:`_query_snapshot`) and
+    feeds both the shortlist search and the exact rescoring.
+
     Returns (query_id, vec_id, exact_dist2, rnk)."""
-    short = ann_query_index(
-        spark,
-        store_path,
-        queries,
-        k=r_shortlist,
-        nprobe=nprobe,
-        geometry=geometry,
-        allowed=allowed,
+    geo = check_ann_geometry(spark, store_path, geometry)
+    if vectors_from_store and not has_vector_sidecar(spark, store_path):
+        raise ValueError(
+            f"ANN store at {store_path} was created without the "
+            "IVF-Flat vector sidecar (store_vectors=True) — rerank "
+            "needs `corpus` here, or recreate the store with the "
+            "sidecar (streaming/annindex.py)"
+        )
+    if not vectors_from_store and corpus is None:
+        raise ValueError(
+            "ann_rerank_index needs the upstream `corpus` unless "
+            "vectors_from_store=True"
+        )
+    qbase = _query_snapshot(queries)
+    short = _ann_topk(
+        spark, store_path, geo, qbase, r_shortlist, nprobe, allowed
     )
-    qa = quantize(queries).select(
+    qa = qbase.select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qav")
     )
     if vectors_from_store:
-        if not has_vector_sidecar(spark, store_path):
-            raise ValueError(
-                f"ANN store at {store_path} was created without the "
-                "IVF-Flat vector sidecar (store_vectors=True) — rerank "
-                "needs `corpus` here, or recreate the store with the "
-                "sidecar (streaming/annindex.py)"
-            )
         cells = [
             int(r.cell) for r in short.select("cell").distinct().collect()
         ]
@@ -1175,11 +1208,6 @@ def ann_rerank_index(
             .select("vec_id", "qv")
         )
     else:
-        if corpus is None:
-            raise ValueError(
-                "ann_rerank_index needs the upstream `corpus` unless "
-                "vectors_from_store=True"
-            )
         vectors = quantize(corpus)
     rescored = (
         vectors
@@ -1245,7 +1273,7 @@ def ann_range_index(
     geo = check_ann_geometry(spark, store_path, geometry)
     n_buckets = geo["n_buckets"]
     coarse, _cb = read_codebooks(spark, store_path)
-    qbase = quantize(queries)
+    qbase = _query_snapshot(queries)
     # materialized once — feeds the scan-pruning collect AND the join
     probes = _query_probes(
         spark, store_path, qbase, coarse, geo, nprobe

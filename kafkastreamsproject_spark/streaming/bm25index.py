@@ -85,6 +85,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kafkastreamsproject_spark.functions import text as TX
+from kafkastreamsproject_spark.session import local_rows
 from kafkastreamsproject_spark.storeconfig import DEFAULTS
 from kafkastreamsproject_spark.sources.bucketed import (
     append_bucketed_store,
@@ -414,8 +415,8 @@ def corpus_stats(spark: SparkSession, store_path: str,
                 )
                 n -= adj.n
                 s -= adj.s
-        return spark.createDataFrame(
-            [(int(n), int(s))], "n_docs long, dl_sum long"
+        return local_rows(
+            spark, "n_docs long, dl_sum long", [(int(n), int(s))]
         )
     seen = read_seen(spark, store_path, n_buckets)
     if exclude is not None:
@@ -587,9 +588,7 @@ def _term_probe(rel: DataFrame, terms: list[str]) -> DataFrame:
     terms = list(dict.fromkeys(terms))
     if len(terms) <= _max_probe_terms():
         return rel.filter(F.col("t").isin(terms))
-    tdf = rel.sparkSession.createDataFrame(
-        [(t,) for t in terms], "t string"
-    )
+    tdf = local_rows(rel.sparkSession, "t string", [(t,) for t in terms])
     return rel.join(F.broadcast(tdf), "t", "left_semi")
 
 

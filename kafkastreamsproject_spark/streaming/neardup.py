@@ -55,6 +55,7 @@ from kafkastreamsproject_spark.operators.fs import (
     hadoop_has_files,
     hadoop_swap_dir,
 )
+from kafkastreamsproject_spark.session import local_rows
 from kafkastreamsproject_spark.streaming.pipeline import _replay_safe_sink
 
 SHINGLE_W = 5
@@ -181,7 +182,7 @@ def _read_store(spark: SparkSession, sig_path: str) -> DataFrame:
     # overwrites-from-empty instead of merging).
     if hadoop_has_files(spark, sig_path):
         return spark.read.schema(_SIG_SCHEMA).parquet(sig_path)
-    return spark.createDataFrame([], _SIG_SCHEMA)
+    return local_rows(spark, _SIG_SCHEMA)
 
 
 def ingest_batch(

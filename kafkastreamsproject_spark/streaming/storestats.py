@@ -31,12 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkastreamsproject_spark.session import local_rows
+
 
 def _stat_row(spark, name: str, df: DataFrame | None, files: int):
     n = 0 if df is None else df.count()
-    return spark.createDataFrame(
-        [(name, int(n), int(files))],
+    return local_rows(
+        spark,
         "substore string, rows long, data_files int",
+        [(name, int(n), int(files))],
     )
 
 

@@ -1426,3 +1426,52 @@ def test_retire_store_versions_spares_unpublished_and_nonversion_dirs(
     # non-version children are never candidates
     assert (base / "scratch").exists() and (base / "postings").exists()
     assert (base / "v0002").exists()
+
+
+def test_each_read_evaluates_its_query_batch_once(spark, tmp_path):
+    """Top-k, range and rerank reads evaluate the caller's query
+    relation once per call: a Python UDF in it counts one call per
+    query row, and the rows equal those of an uncounted batch."""
+    from pyspark.sql.functions import udf
+
+    from kafkastreamsproject_spark.streaming.annindex import (
+        ann_range_index,
+        ann_rerank_index,
+    )
+
+    corpus = _emb(spark, 0, 40)
+    store = str(tmp_path / "once")
+    create_ann_store(
+        spark, store, corpus,
+        c_cells=12, k_codes=16, m_subspaces=4, n_buckets=8,
+        store_vectors=True,
+    )
+    ann_ingest_batch(corpus, store)
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @udf("array<float>")
+    def counted(v):
+        calls.add(1)
+        return v
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    reads = {
+        "topk": lambda q: ann_query_index(spark, store, q, k=5, nprobe=2),
+        "range": lambda q: ann_range_index(spark, store, q, radius2=3000),
+        "rerank": lambda q: ann_rerank_index(
+            spark, store, q, k=5, nprobe=2, r_shortlist=10,
+            vectors_from_store=True,
+        ),
+    }
+    for name, read in reads.items():
+        want = rows(read(_emb(spark, 0, 3)))
+        assert want, name
+        before = calls.value
+        q = _emb(spark, 0, 3).select(
+            "vec_id", counted("embedding").alias("embedding")
+        )
+        assert rows(read(q)) == want, name
+        assert calls.value - before == 3, name

@@ -947,3 +947,47 @@ def test_wide_term_probe_switches_to_semi_join(spark, tmp_path, monkeypatch):
         == narrow_bool
     )
     monkeypatch.delenv("SPARK_GRAFT_MAX_PROBE_TERMS")
+
+
+def test_sidecar_reads_plan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """Over a store with a stats sidecar, neither read form plans a
+    Python-RDD relation (a ``LogicalRDD`` leaf): the corpus-stats row
+    is JVM-local, so a read starts no Python-worker task.  Holds with
+    pending tombstones and on the wide-probe semi-join path, and the
+    scores equal the legacy ledger path's."""
+    import kafkastreamsproject_spark.streaming.bm25index as bm
+    from kafkastreamsproject_spark.streaming.bm25index import (
+        boolean_query_index,
+        tombstone_docs_in_index,
+    )
+
+    store = str(tmp_path / "jvm_reads")
+    index_ingest_batch(_docs(spark, B1), store)
+    index_ingest_batch(_docs(spark, B2), store)
+    assert bm.read_stats_sidecar(spark, store) is not None
+
+    def reads():
+        return [
+            query_index(spark, store, TERMS),
+            boolean_query_index(
+                spark, store, must=("alpha",), should=("beta", "gamma")
+            ),
+        ]
+
+    def check():
+        with_sidecar = []
+        for df in reads():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" not in plan, plan
+            with_sidecar.append(_scores(df))
+        with monkeypatch.context() as m:
+            m.setattr(bm, "read_stats_sidecar", lambda *a, **k: None)
+            assert [_scores(df) for df in reads()] == with_sidecar
+
+    check()
+    tombstone_docs_in_index(
+        spark, spark.createDataFrame([(2,)], "doc_id long"), store
+    )
+    check()
+    monkeypatch.setenv("SPARK_GRAFT_MAX_PROBE_TERMS", "1")
+    check()

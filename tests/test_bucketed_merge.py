@@ -253,3 +253,42 @@ def test_merge_handles_nested_type_schemas(spark, tmp_path):
     )
     assert rows == [("a", "2.25", {"y": 2}), ("b", "9.99", {"z": 3})]
     spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_absent_store_opens_without_a_python_rdd(spark, tmp_path):
+    """An absent store (never written, or a stale catalog entry whose
+    files are gone) opens as an empty relation of the store schema
+    that Spark evaluates in the JVM: no ``LogicalRDD`` leaf in its
+    optimized plan, so a fold's probe of it starts no Python-worker
+    task.  The near-dup signature store opens the same way."""
+    from kafkastreamsproject_spark.streaming.neardup import _read_store
+
+    schema = "k string, v bigint, tags array<string>"
+
+    def check(df, want_schema):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, plan
+        assert df.schema.simpleString() == want_schema
+        assert df.collect() == []
+
+    def opened(path):
+        return read_bucketed_store(
+            spark, path, table, schema, ["k"], N_BUCKETS
+        )
+
+    table = "t_absent_store"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    check(
+        opened(str(tmp_path / "absent")),
+        "struct<k:string,v:bigint,tags:array<string>>",
+    )
+    stale = str(tmp_path / "stale")
+    spark.sql(
+        f"CREATE TABLE {table} ({schema}) USING parquet LOCATION '{stale}'"
+    )
+    check(opened(stale), "struct<k:string,v:bigint,tags:array<string>>")
+    assert not spark.catalog.tableExists(table)
+    check(
+        _read_store(spark, str(tmp_path / "sigs")),
+        "struct<doc_id:bigint,hset:array<bigint>,mhs:array<bigint>>",
+    )
