@@ -73,15 +73,35 @@ def hadoop_swap_dir(spark: SparkSession, live: str, staged: str) -> None:
     compaction swap: atomic on HDFS/local FS; on rename-less object
     stores it degrades to copy+delete with a visible-but-consistent
     intermediate (both generations hold identical rows).  Single-writer:
-    run between folds."""
+    run between folds.  A failed rename raises; a crash between the two
+    renames leaves only ``<live>_old``, which
+    :func:`hadoop_restore_swapped` puts back on the next open."""
     fs, live_p = _fs_and_path(spark, live)
     _, staged_p = _fs_and_path(spark, staged)
     _, old_p = _fs_and_path(spark, f"{live}_old")
     if fs.exists(old_p):
         fs.delete(old_p, True)
-    fs.rename(live_p, old_p)
-    fs.rename(staged_p, live_p)
+    for src, dst in ((live_p, old_p), (staged_p, live_p)):
+        if not fs.rename(src, dst):
+            raise OSError(f"compaction swap: rename {src} -> {dst} failed")
     fs.delete(old_p, True)
+
+
+def hadoop_restore_swapped(spark: SparkSession, live: str) -> None:
+    """Undo a compaction swap interrupted between its two renames:
+    when ``live`` is missing and ``<live>_old`` exists, the old
+    generation is the only copy of the store, so it moves back.  Run
+    before a store is opened; without it the next fold starts an empty
+    live store and the next swap deletes ``<live>_old``.  Like the
+    swap itself this assumes the single-writer contract: an open that
+    lands inside a RUNNING swap's two-rename window would restore too
+    early."""
+    fs, live_p = _fs_and_path(spark, live)
+    if fs.exists(live_p):
+        return
+    _, old_p = _fs_and_path(spark, f"{live}_old")
+    if fs.exists(old_p) and not fs.rename(old_p, live_p):
+        raise OSError(f"cannot restore {old_p} -> {live_p}")
 
 
 def hadoop_count_files(

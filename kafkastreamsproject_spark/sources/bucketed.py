@@ -13,9 +13,23 @@ shuffles).  Pick n_buckets so a bucket ≈ one task's worth of data
 from __future__ import annotations
 
 import hashlib
+import json
+import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from kafkastreamsproject_spark.operators.fs import (
+    _fs_and_path,
+    hadoop_count_files,
+    hadoop_exists,
+    hadoop_has_files,
+    hadoop_read_text,
+    hadoop_restore_swapped,
+    hadoop_swap_dir,
+    hadoop_write_text,
+)
 from kafkastreamsproject_spark.session import (
     local_rows,
     shuffle_partitions_scoped,
@@ -93,10 +107,6 @@ _META_FILE = "_store_meta.json"
 def write_store_meta(
     spark: SparkSession, path: str, bucket_cols: list[str], n_buckets: int
 ) -> None:
-    import json
-
-    from kafkastreamsproject_spark.operators.fs import hadoop_write_text
-
     hadoop_write_text(
         spark,
         f"{path}/{_META_FILE}",
@@ -105,10 +115,6 @@ def write_store_meta(
 
 
 def read_store_meta(spark: SparkSession, path: str) -> dict | None:
-    import json
-
-    from kafkastreamsproject_spark.operators.fs import hadoop_read_text
-
     text = hadoop_read_text(spark, f"{path}/{_META_FILE}")
     return json.loads(text) if text else None
 
@@ -142,6 +148,22 @@ def store_table_name(prefix: str, path: str) -> str:
     return f"{prefix}_{digest}"
 
 
+def open_store(
+    spark: SparkSession, path: str, bucket_cols: list[str], n_buckets: int
+) -> bool:
+    """The one place a bucketed store is opened — every read, append,
+    compact, forget and merge goes through it.  Puts back a store an
+    interrupted compaction swap left at ``<path>_old``
+    (operators/fs.py:hadoop_restore_swapped), then returns whether the
+    store holds data files, asserting the caller's bucket spec against
+    the sidecar when it does."""
+    hadoop_restore_swapped(spark, path)
+    has_files = hadoop_has_files(spark, path)
+    if has_files:
+        check_store_meta(spark, path, bucket_cols, n_buckets)
+    return has_files
+
+
 def read_bucketed_store(
     spark: SparkSession,
     path: str,
@@ -157,11 +179,7 @@ def read_bucketed_store(
     file names, so re-declaring the table over them restores the
     shuffle-free probe) and drops a stale catalog entry whose files
     are gone (recycled test tmpdirs)."""
-    from kafkastreamsproject_spark.operators.fs import hadoop_has_files
-
-    has_files = hadoop_has_files(spark, path)
-    if has_files:
-        check_store_meta(spark, path, bucket_cols, n_buckets)
+    has_files = open_store(spark, path, bucket_cols, n_buckets)
     if spark.catalog.tableExists(table_name):
         if has_files:
             # Always re-list: appends may have happened in ANOTHER
@@ -186,6 +204,30 @@ def read_bucketed_store(
         )
         return spark.table(table_name)
     return local_rows(spark, schema)
+
+
+def _bucketed_write(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    table_name: str,
+    bucket_cols: list[str],
+    n_buckets: int,
+    mode: str = "append",
+) -> None:
+    """Repartition ``df`` onto the bucket key and write it bucketed,
+    declaring the external table at ``path`` when the catalog has no
+    entry yet."""
+    writer = (
+        df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
+        .write.mode(mode)
+        .format("parquet")
+        .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+    )
+    if not spark.catalog.tableExists(table_name):
+        writer = writer.option("path", path)
+    writer.saveAsTable(table_name)
 
 
 def append_bucketed_store(
@@ -215,22 +257,8 @@ def append_bucketed_store(
     amplification.  Cost: one batch-sized shuffle per append (appends
     are batch-sized by contract; the store side still never
     shuffles)."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsproject_spark.operators.fs import hadoop_has_files
-
-    if hadoop_has_files(spark, path):
-        check_store_meta(spark, path, bucket_cols, n_buckets)
-    writer = (
-        df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-    )
-    if not spark.catalog.tableExists(table_name):
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
+    open_store(spark, path, bucket_cols, n_buckets)
+    _bucketed_write(spark, df, path, table_name, bucket_cols, n_buckets)
     # stamp the spec the store now physically has (first write creates
     # the sidecar; later appends re-assert above, so this is a no-op
     # rewrite of identical bytes)
@@ -259,28 +287,14 @@ def compact_bucketed_store(
     Reads via plain parquet (bucket metadata is ignored on read), so
     this also MIGRATES a legacy unbucketed store into the bucketed
     layout.  Returns the data-file count after compaction."""
-    from kafkastreamsproject_spark.operators.fs import (
-        hadoop_count_files,
-        hadoop_has_files,
-        hadoop_swap_dir,
-    )
-    from pyspark.sql import functions as F
-
-    if not hadoop_has_files(spark, path):
+    if not open_store(spark, path, bucket_cols, n_buckets):
         return 0
-    check_store_meta(spark, path, bucket_cols, n_buckets)
     store = spark.read.schema(schema).parquet(path)
     tmp_path = f"{path}_compacting"
     tmp_name = f"{table_name}_compacting"
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-    (
-        store.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .option("path", tmp_path)
-        .saveAsTable(tmp_name)
+    _bucketed_write(
+        spark, store, tmp_path, tmp_name, bucket_cols, n_buckets, "overwrite"
     )
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
     hadoop_swap_dir(spark, path, tmp_path)
@@ -290,6 +304,26 @@ def compact_bucketed_store(
     if spark.catalog.tableExists(table_name):
         spark.sql(f"REFRESH TABLE {table_name}")
     return hadoop_count_files(spark, path)
+
+
+#: the bucket id Spark's bucketed write encodes in each file name
+_BUCKET_ID = re.compile(r"_(\d{5})(?:\.|$)")
+
+
+def _bucket_files(spark: SparkSession, path: str) -> list[tuple[int, object]]:
+    """(bucket id, Hadoop Path) of every bucket-encoded data file
+    directly under ``path`` (empty when the directory is absent).  One
+    driver-side listing."""
+    fs, root = _fs_and_path(spark, path)
+    if not fs.exists(root):
+        return []
+    out = []
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        m = _BUCKET_ID.search(name)
+        if name.endswith(".parquet") and m:
+            out.append((int(m.group(1)), status.getPath()))
+    return out
 
 
 def max_files_per_bucket(spark: SparkSession, path: str) -> int:
@@ -302,23 +336,7 @@ def max_files_per_bucket(spark: SparkSession, path: str) -> int:
     compacts exactly when the store needs it, whatever the epoch
     pattern).  One directory listing, driver-side
     and bounded by the file count the trigger itself keeps small."""
-    import re
-    from collections import Counter
-
-    from kafkastreamsproject_spark.operators.fs import _fs_and_path
-
-    fs, root = _fs_and_path(spark, path)
-    if not fs.exists(root):
-        return 0
-    pat = re.compile(r"_(\d{5})(?:\.|$)")
-    counts: Counter[int] = Counter()
-    for status in fs.listStatus(root):
-        fname = status.getPath().getName()
-        if not fname.endswith(".parquet"):
-            continue
-        m = pat.search(fname)
-        if m:
-            counts[int(m.group(1))] += 1
+    counts = Counter(b for b, _ in _bucket_files(spark, path))
     return max(counts.values(), default=0)
 
 
@@ -327,18 +345,12 @@ def _affected_bucket_files(
 ) -> tuple[list[int], list]:
     """(bucket ids, data-file Paths) the distinct ``key_col`` values in
     ``keys`` hash-route to — the shared locality step of
-    :func:`forget_keys_in_store` and :func:`merge_upsert_in_store`.
+    :func:`forget_rows_in_store` and :func:`merge_upsert_in_store`.
     The bucket id is ``pmod(murmur3(key), n)`` — the same expression
     ``bucketBy`` routes writes with (and ``F.hash`` exposes) — so any
     store row that could match a key lives in one of these files.
     Driver state is bounded: at most ``n_buckets`` ids come back (one
     collect_list row, the perceptron-trainer device)."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from kafkastreamsproject_spark.operators.fs import _fs_and_path
-
     row = (
         keys.select(F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).alias("b"))
         .distinct()
@@ -349,18 +361,33 @@ def _affected_bucket_files(
     bucket_ids = sorted(row.bs) if row and row.bs else []
     if not bucket_ids:
         return [], []
-    fs, root = _fs_and_path(spark, path)
-    pat = re.compile(r"_(\d{5})(?:\.|$)")
     wanted = set(bucket_ids)
-    files = []
-    for status in fs.listStatus(root):
-        fname = status.getPath().getName()
-        if not fname.endswith(".parquet"):
-            continue
-        m = pat.search(fname)
-        if m and int(m.group(1)) in wanted:
-            files.append(status.getPath())
-    return bucket_ids, files
+    return bucket_ids, [p for b, p in _bucket_files(spark, path) if b in wanted]
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    kept: DataFrame,
+    files: list,
+    path: str,
+    table_name: str,
+    bucket_cols: list[str],
+    n_buckets: int,
+) -> int:
+    """The bucket-local rewrite tail of every row-level change: pin
+    ``kept`` (the rows the touched bucket ``files`` keep), delete those
+    files, append ``kept`` back bucketed and refresh the table.
+    Returns the number of rows written back."""
+    kept = kept.localCheckpoint(eager=True)  # pin before deleting sources
+    n_kept = kept.count()
+    fs, _root = _fs_and_path(spark, path)
+    for p in files:
+        fs.delete(p, False)
+    if n_kept > 0:
+        _bucketed_write(spark, kept, path, table_name, bucket_cols, n_buckets)
+    if spark.catalog.tableExists(table_name):
+        spark.sql(f"REFRESH TABLE {table_name}")
+    return n_kept
 
 
 def merge_upsert_in_store(
@@ -388,7 +415,7 @@ def merge_upsert_in_store(
     full-store rewrite per CDC batch is as untenable as one per
     erasure.  Bucketing makes the merge local — the change set maps to
     a bounded set of bucket ids (same collect_list device as
-    :func:`forget_keys_in_store`), only THOSE buckets' files are read,
+    :func:`forget_rows_in_store`), only THOSE buckets' files are read,
     anti-joined, unioned with the change rows, and rewritten; every
     other bucket's files are untouched bytes (file-identity asserted
     in tests/test_bucketed_merge.py).  Cost ∝ |affected buckets| ·
@@ -399,13 +426,6 @@ def merge_upsert_in_store(
     probes.  Returns counts: affected_buckets, files_rewritten,
     rows_updated (matched, replaced), rows_inserted (unmatched),
     rows_deleted (matched tombstones)."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsproject_spark.operators.fs import (
-        _fs_and_path,
-        hadoop_has_files,
-    )
-
     key_col = bucket_cols[0]
     n_changes = changes.count()
     n_keys = changes.select(key_col).distinct().count()
@@ -426,7 +446,7 @@ def merge_upsert_in_store(
     upserts = changes.filter(~F.coalesce(ts, F.lit(False))).select(*store_cols)
     tombstones = changes.filter(F.coalesce(ts, F.lit(False))).select(key_col)
 
-    if not hadoop_has_files(spark, path):
+    if not open_store(spark, path, bucket_cols, n_buckets):
         n_ins = upserts.count()
         if n_ins:
             append_bucketed_store(
@@ -439,11 +459,9 @@ def merge_upsert_in_store(
             "rows_inserted": n_ins,
             "rows_deleted": 0,
         }
-    check_store_meta(spark, path, bucket_cols, n_buckets)
     bucket_ids, affected_files = _affected_bucket_files(
         spark, changes, key_col, n_buckets, path
     )
-    fs, _root = _fs_and_path(spark, path)
     paths = [p.toString() for p in affected_files]
     old_rows = (
         spark.read.schema(schema).parquet(*paths)
@@ -463,112 +481,15 @@ def merge_upsert_in_store(
     kept = old_rows.join(
         F.broadcast(change_keys), key_col, "left_anti"
     ).unionByName(upserts)
-    # pin the merged rows before deleting their source files
-    kept = kept.localCheckpoint(eager=True)
-    n_kept = kept.count()
-    for p in affected_files:
-        fs.delete(p, False)
-    if n_kept > 0:
-        writer = (
-            kept.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-        )
-        if not spark.catalog.tableExists(table_name):
-            writer = writer.option("path", path)
-        writer.saveAsTable(table_name)
-    if spark.catalog.tableExists(table_name):
-        spark.sql(f"REFRESH TABLE {table_name}")
+    _rewrite_buckets(
+        spark, kept, affected_files, path, table_name, bucket_cols, n_buckets
+    )
     return {
         "affected_buckets": len(bucket_ids),
         "files_rewritten": len(affected_files),
         "rows_updated": n_upd,
         "rows_inserted": n_ins,
         "rows_deleted": n_del,
-    }
-
-
-def forget_keys_in_store(
-    spark: SparkSession,
-    keys: DataFrame,
-    path: str,
-    table_name: str,
-    schema: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-) -> dict[str, int]:
-    """Targeted deletion (right-to-be-forgotten) from a bucketed store:
-    remove every store row whose bucket-key value appears in ``keys``,
-    touching ONLY the buckets those keys hash to.
-
-    At 100 TB a GDPR erasure over an append-only corpus-sized store
-    cannot be a full rewrite.  Bucketing makes deletion local: the
-    bucket id is ``pmod(murmur3(key), n)`` — the same expression
-    ``bucketBy`` routes writes with (and ``F.hash`` exposes) — so the
-    delete set maps to a bounded set of bucket ids, and only THOSE
-    buckets' files are read, anti-joined, and rewritten; every other
-    bucket's files are untouched bytes (asserted by file identity in
-    tests/test_neardup_ingest.py).  Cost ∝ |affected buckets| ·
-    bucket size, independent of store size for localized delete sets.
-
-    Single-writer maintenance op (the compaction contract): run
-    between epochs; delete-then-append is not atomic under concurrent
-    probes.  Returns counts: affected_buckets, files_rewritten,
-    rows_deleted."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsproject_spark.operators.fs import (
-        _fs_and_path,
-        hadoop_has_files,
-    )
-
-    if not hadoop_has_files(spark, path):
-        return {"affected_buckets": 0, "files_rewritten": 0, "rows_deleted": 0}
-    check_store_meta(spark, path, bucket_cols, n_buckets)
-    key_col = bucket_cols[0]
-    bucket_ids, affected_files = _affected_bucket_files(
-        spark, keys, key_col, n_buckets, path
-    )
-    if not bucket_ids:
-        return {"affected_buckets": 0, "files_rewritten": 0, "rows_deleted": 0}
-    fs, _root = _fs_and_path(spark, path)
-    if not affected_files:
-        return {
-            "affected_buckets": len(bucket_ids),
-            "files_rewritten": 0,
-            "rows_deleted": 0,
-        }
-    paths = [p.toString() for p in affected_files]
-    old_rows = spark.read.schema(schema).parquet(*paths)
-    # count BEFORE deleting the files, off the one reader — a second
-    # spark.read of the same paths doubled the rewrite's read cost
-    # (r12 ADVICE); a bare count() reads only parquet footers anyway
-    n_old = old_rows.count()
-    kept = old_rows.join(
-        F.broadcast(keys.select(key_col).distinct()), key_col, "left_anti"
-    ).localCheckpoint(eager=True)  # pin before deleting source files
-    n_kept = kept.count()
-    for p in affected_files:
-        fs.delete(p, False)
-    if n_kept > 0:
-        writer = (
-            kept.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-        )
-        if not spark.catalog.tableExists(table_name):
-            writer = writer.option("path", path)
-        writer.saveAsTable(table_name)
-    if spark.catalog.tableExists(table_name):
-        spark.sql(f"REFRESH TABLE {table_name}")
-    return {
-        "affected_buckets": len(bucket_ids),
-        "files_rewritten": len(affected_files),
-        "rows_deleted": n_old - n_kept,
     }
 
 
@@ -580,81 +501,70 @@ def forget_rows_in_store(
     schema: str,
     bucket_cols: list[str],
     n_buckets: int,
-    match_cols: list[str],
+    match_cols: list[str] | None = None,
 ) -> dict[str, int]:
-    """Row-level targeted deletion: remove every store row whose
-    ``match_cols`` tuple appears in ``keys`` — the generalization of
-    :func:`forget_keys_in_store` for stores where the erasure
-    predicate is FINER than the bucket key (e.g. a postings store
-    bucketed on the term, erased by (term, doc): many rows share the
-    bucket key and only the victim doc's must go).
+    """Targeted deletion (right-to-be-forgotten) from a bucketed store:
+    remove every store row whose ``match_cols`` tuple (default: the
+    bucket key alone) appears in ``keys``, touching ONLY the buckets
+    those keys hash to.
 
-    ``match_cols`` must contain ``bucket_cols[0]`` — that is what
-    makes the deletion bucket-local: the keys' bucket-key values bound
-    the affected buckets exactly as in the key-level form, only those
-    buckets' files are read, anti-joined ON THE FULL TUPLE, and
-    rewritten; every other bucket's files are untouched bytes.
+    At 100 TB a GDPR erasure over an append-only corpus-sized store
+    cannot be a full rewrite.  Bucketing makes deletion local: the
+    keys' bucket-key values map to a bounded set of bucket ids
+    (:func:`_affected_bucket_files`), and only THOSE buckets' files
+    are read, anti-joined on the full ``match_cols`` tuple, and
+    rewritten; every other bucket's files are untouched bytes
+    (asserted by file identity in tests/test_neardup_ingest.py).  Cost
+    ∝ |affected buckets| · bucket size, independent of store size for
+    localized delete sets.  ``match_cols`` may be FINER than the
+    bucket key (a postings store bucketed on the term, erased by
+    (term, doc): many rows share the bucket key and only the victim
+    doc's must go), but must contain ``bucket_cols[0]`` — without it
+    the delete set cannot be bucket-localized.
 
-    Single-writer maintenance op (the compaction contract).  Returns
-    counts: affected_buckets, files_rewritten, rows_deleted."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsproject_spark.operators.fs import (
-        _fs_and_path,
-        hadoop_has_files,
-    )
-
+    Single-writer maintenance op (the compaction contract): run
+    between epochs; delete-then-append is not atomic under concurrent
+    probes.  Returns counts: affected_buckets, files_rewritten,
+    rows_deleted."""
     key_col = bucket_cols[0]
+    match_cols = list(match_cols or [key_col])
     if key_col not in match_cols:
         raise ValueError(
             f"match_cols {match_cols} must include the bucket key "
             f"{key_col!r} — without it the delete set cannot be "
             "bucket-localized"
         )
-    if not hadoop_has_files(spark, path):
+    if not open_store(spark, path, bucket_cols, n_buckets):
         return {"affected_buckets": 0, "files_rewritten": 0, "rows_deleted": 0}
-    check_store_meta(spark, path, bucket_cols, n_buckets)
-    bucket_ids, affected_files = _affected_bucket_files(
+    bucket_ids, files = _affected_bucket_files(
         spark, keys, key_col, n_buckets, path
     )
-    if not bucket_ids or not affected_files:
+    if not files:
         return {
             "affected_buckets": len(bucket_ids),
             "files_rewritten": 0,
             "rows_deleted": 0,
         }
-    fs, _root = _fs_and_path(spark, path)
-    paths = [p.toString() for p in affected_files]
-    old_rows = spark.read.schema(schema).parquet(*paths)
-    # count off the one reader before deletion (r12 ADVICE; see
-    # forget_keys_in_store)
+    old_rows = spark.read.schema(schema).parquet(*[p.toString() for p in files])
+    # count BEFORE deleting the files, off the one reader — a second
+    # spark.read of the same paths doubled the rewrite's read cost
+    # (r12 ADVICE); a bare count() reads only parquet footers anyway
     n_old = old_rows.count()
     kept = old_rows.join(
-        F.broadcast(keys.select(*match_cols).distinct()),
-        match_cols,
-        "left_anti",
-    ).localCheckpoint(eager=True)  # pin before deleting source files
-    n_kept = kept.count()
-    for p in affected_files:
-        fs.delete(p, False)
-    if n_kept > 0:
-        writer = (
-            kept.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-        )
-        if not spark.catalog.tableExists(table_name):
-            writer = writer.option("path", path)
-        writer.saveAsTable(table_name)
-    if spark.catalog.tableExists(table_name):
-        spark.sql(f"REFRESH TABLE {table_name}")
+        F.broadcast(keys.select(*match_cols).distinct()), match_cols, "left_anti"
+    )
+    n_kept = _rewrite_buckets(
+        spark, kept, files, path, table_name, bucket_cols, n_buckets
+    )
     return {
         "affected_buckets": len(bucket_ids),
-        "files_rewritten": len(affected_files),
+        "files_rewritten": len(files),
         "rows_deleted": n_old - n_kept,
     }
+
+
+#: key-level form: match on the bucket key alone
+forget_keys_in_store = forget_rows_in_store
 
 
 # ---------------------------------------------------------------------------
@@ -678,8 +588,6 @@ def current_store_version(
 ) -> str | None:
     """The published version name under ``base_path``, or None when
     nothing has been published yet."""
-    from kafkastreamsproject_spark.operators.fs import hadoop_read_text
-
     text = hadoop_read_text(spark, f"{base_path}/{_CURRENT_FILE}")
     return text.strip() if text else None
 
@@ -691,11 +599,6 @@ def publish_store_version(
     child directory that must already hold a complete store).  One
     small file write — the swap costs the same whether the version
     holds 10³ or 10¹² rows."""
-    from kafkastreamsproject_spark.operators.fs import (
-        hadoop_exists,
-        hadoop_write_text,
-    )
-
     if not hadoop_exists(spark, f"{base_path}/{version}"):
         raise ValueError(
             f"cannot publish {base_path}/{version}: the version "
@@ -737,8 +640,6 @@ def retire_store_versions(
     unpublished base could delete a fully-built, about-to-be-published
     store, contradicting the 'never touches the published version'
     contract's intent."""
-    from kafkastreamsproject_spark.operators.fs import _fs_and_path
-
     cur = current_store_version(spark, base_path)
     if cur is None:
         return []

@@ -24,19 +24,21 @@ vector-side counterpart of ``streaming/bm25index.py``:
   pruning is (query, vec, long) triples.
 - **seen** (bucketed append store keyed on vec_id): the doc-granular
   freshness ledger — replayed or re-delivered vectors are dropped at
-  a bucket-key anti-join, exactly the bm25index contract (same write
-  order, same crash-window analysis, same epoch-marker streaming
-  wrapper pattern; codes append first, seen is the commit point).
-- **tombstones** (tiny plain-parquet append set, r14): PENDING
-  logical deletes.  :func:`tombstone_vectors_in_index` is the O(1)
-  delete tier — one small append, no store rewrite — and every query
-  anti-joins the pending set out of its candidates pre-ADC, so a
-  deleted vector disappears from results at the NEXT query.
-  :func:`apply_tombstones` makes the delete physical (the
-  :func:`forget_vectors_in_index` bucket-local rewrite) and clears
-  the set — the Kafka-log-compaction delete model (reference
-  semantics: a null-valued record tombstones its key in a compacted
-  topic until log cleaning drops both) re-expressed over parquet.
+  a bucket-key anti-join.
+- **vecs** (optional IVF-Flat sidecar, cell-bucketed): the quantized
+  vectors, for exact rerank from the probed cells.
+- **tombstones**: PENDING logical deletes — every query anti-joins
+  them out of its candidates pre-ADC until :func:`apply_tombstones`
+  makes them physical, the Kafka-log-compaction delete model
+  (reference semantics: a null-valued record tombstones its key in a
+  compacted topic until log cleaning drops both) over parquet.
+
+Lifecycle: the stores are one :data:`ANN` spec of
+``streaming/keyedstore.py`` (key ``vec_id``; the ``seen`` ledger; the
+``codes`` and optional ``vecs`` row substores), so reads, compaction,
+erasure, upsert and tombstones follow its four rules and its write
+order — codes first, the ledger last as the commit point.  Only the
+codebook-residue guard is ANN's own.
 
 Geometry is a STORE-CREATION PARAMETER, not a module constant (r12
 verdict #1: frozen ``C_CELLS = 8`` made every query ADC-score a fixed
@@ -75,26 +77,30 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kafkastreamsproject_spark.storeconfig import DEFAULTS
-from kafkastreamsproject_spark.sources.bucketed import (
-    append_bucketed_store,
-    compact_bucketed_store,
-    read_bucketed_store,
-    shuffle_scoped_to_buckets,
-    store_table_name,
-)
+from kafkastreamsproject_spark.sources.bucketed import shuffle_scoped_to_buckets
+from kafkastreamsproject_spark.streaming import keyedstore as ks
+from kafkastreamsproject_spark.streaming.keyedstore import KeyedIndex, Substore
 from kafkastreamsproject_spark.streaming.pipeline import _replay_safe_sink
 
-_CODES_SCHEMA = "cell int, vec_id long, s int, cid int"
-_SEEN_SCHEMA = "vec_id long"
 _CB_SCHEMA = "s int, cid int, cv array<bigint>"
 _COARSE_SCHEMA = "ccid int, cv2 array<bigint>"
+_CODES = Substore(
+    "codes", "cell int, vec_id long, s int, cid int", ("cell",), "ann_codes"
+)
 #: IVF-Flat sidecar: the quantized vectors themselves, cell-bucketed
 #: like the codes, so exact rerank can read ONLY the probed cells
 #: (pushed ``cell IN`` scan filter) instead of one pass over the
 #: upstream corpus.  Opt-in at store creation (it doubles-ish the
 #: store's footprint: dim int64s per vector vs M codes).
-_VECS_SCHEMA = "cell int, vec_id long, qv array<bigint>"
 _VECS_MARKER = "_vector_sidecar"
+_VECS = Substore(
+    "vecs", "cell int, vec_id long, qv array<bigint>", ("cell",), "ann_vecs",
+    optional=True,
+)
+ANN = KeyedIndex(
+    "vec_id", Substore("seen", "vec_id long", ("vec_id",), "ann_seen"),
+    (_CODES, _VECS),
+)
 
 #: DEFAULT geometry = the batch-family test-SF convention
 #: (plans/similarity.py) — the default-geometry store must equal the
@@ -657,52 +663,36 @@ def encode_pq(sub: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def _codes_path(store_path: str) -> str:
-    return f"{store_path}/codes"
-
-
-def _seen_path(store_path: str) -> str:
-    return f"{store_path}/seen"
-
-
-def _vecs_path(store_path: str) -> str:
-    return f"{store_path}/vecs"
+def _width(spark: SparkSession, store_path: str, n_buckets: int | None) -> int:
+    if n_buckets is None:
+        return ann_geometry(spark, store_path)["n_buckets"]
+    return n_buckets
 
 
 def read_vecs(
     spark: SparkSession, store_path: str, n_buckets: int | None = None
 ) -> DataFrame:
-    if n_buckets is None:
-        n_buckets = ann_geometry(spark, store_path)["n_buckets"]
-    path = _vecs_path(store_path)
-    return read_bucketed_store(
-        spark, path, store_table_name("ann_vecs", path),
-        _VECS_SCHEMA, ["cell"], n_buckets,
-    )
+    return ks.read(spark, _VECS, store_path, _width(spark, store_path, n_buckets))
 
 
 def read_codes(
     spark: SparkSession, store_path: str, n_buckets: int | None = None
 ) -> DataFrame:
-    if n_buckets is None:
-        n_buckets = ann_geometry(spark, store_path)["n_buckets"]
-    path = _codes_path(store_path)
-    return read_bucketed_store(
-        spark, path, store_table_name("ann_codes", path),
-        _CODES_SCHEMA, ["cell"], n_buckets,
-    )
+    return ks.read(spark, _CODES, store_path, _width(spark, store_path, n_buckets))
 
 
 def read_seen(
     spark: SparkSession, store_path: str, n_buckets: int | None = None
 ) -> DataFrame:
-    if n_buckets is None:
-        n_buckets = ann_geometry(spark, store_path)["n_buckets"]
-    path = _seen_path(store_path)
-    return read_bucketed_store(
-        spark, path, store_table_name("ann_seen", path),
-        _SEEN_SCHEMA, ["vec_id"], n_buckets,
-    )
+    return ks.read(spark, ANN.seen, store_path, _width(spark, store_path, n_buckets))
+
+
+def read_tombstones(
+    spark: SparkSession, store_path: str
+) -> DataFrame | None:
+    """The store's PENDING logical deletes (one ``vec_id`` column), or
+    ``None`` when nothing is pending."""
+    return ks.read_tombstones(spark, ANN, store_path)
 
 
 def ann_ingest_batch(
@@ -788,30 +778,17 @@ def ann_ingest_batch(
             .localCheckpoint(eager=True)
         )
 
-        c_path = _codes_path(store_path)
-        append_bucketed_store(
-            spark, codes, c_path, store_table_name("ann_codes", c_path),
-            ["cell"], n_buckets,
-        )
+        ks.append(spark, _CODES, codes, store_path, n_buckets)
         if has_vector_sidecar(spark, store_path):
             # IVF-Flat sidecar: the fresh vectors' quantized
             # embeddings, cell-bucketed like the codes — appended
             # BEFORE the seen commit point (same crash-window order:
             # an uncommitted doc is fully re-indexed on replay)
-            v_path = _vecs_path(store_path)
-            append_bucketed_store(
-                spark,
-                assigned.select("cell", "vec_id", "qv"),
-                v_path,
-                store_table_name("ann_vecs", v_path),
-                ["cell"],
-                n_buckets,
+            ks.append(
+                spark, _VECS, assigned.select("cell", "vec_id", "qv"),
+                store_path, n_buckets,
             )
-        s_path = _seen_path(store_path)
-        append_bucketed_store(
-            spark, fresh.select("vec_id"), s_path,
-            store_table_name("ann_seen", s_path), ["vec_id"], n_buckets,
-        )
+        ks.append(spark, ANN.seen, fresh.select("vec_id"), store_path, n_buckets)
     return {
         "vecs_indexed": fresh.count(),
         "codes_appended": codes.count(),
@@ -821,24 +798,8 @@ def ann_ingest_batch(
 def compact_codes(spark: SparkSession, store_path: str) -> int:
     """Bound per-epoch small files in every store of the index
     (seen + codes + the vecs sidecar when present); run between
-    epochs."""
-    n_buckets = ann_geometry(spark, store_path)["n_buckets"]
-    s_path = _seen_path(store_path)
-    compact_bucketed_store(
-        spark, s_path, store_table_name("ann_seen", s_path),
-        _SEEN_SCHEMA, ["vec_id"], n_buckets,
-    )
-    if has_vector_sidecar(spark, store_path):
-        v_path = _vecs_path(store_path)
-        compact_bucketed_store(
-            spark, v_path, store_table_name("ann_vecs", v_path),
-            _VECS_SCHEMA, ["cell"], n_buckets,
-        )
-    c_path = _codes_path(store_path)
-    return compact_bucketed_store(
-        spark, c_path, store_table_name("ann_codes", c_path),
-        _CODES_SCHEMA, ["cell"], n_buckets,
-    )
+    epochs.  Returns the codes store's data-file count."""
+    return ks.compact(spark, ANN, store_path, _width(spark, store_path, None))
 
 
 def _query_probes(
@@ -1345,7 +1306,7 @@ def to_ann_ingest_sink(vectors: DataFrame, store_path: str, checkpoint: str):
         lambda batch: ann_ingest_batch(batch, store_path),
         available_now=False,
         compact=lambda spark: compact_codes(spark, store_path),
-        compact_probe=_codes_path(store_path),
+        compact_probe=_CODES.path(store_path),
     )
 
 
@@ -1415,9 +1376,10 @@ def forget_vectors_in_index(
     bucket-local (cell, vec_id) row-level forget (each vector lives in
     exactly ONE cell, so the rewrite touches at most |victims| buckets
     — tighter than the text case), and their ledger rows via the
-    key-level forget.  Codes first, ledger last; replay is a no-op;
-    erased ids are re-indexable.  Returns per-store deletion counts
-    plus ``codebook_residue`` (see below).
+    key-level forget; the vecs sidecar, when it holds rows, leaves the
+    same way.  Order, replay and re-indexing follow the keyedstore
+    rules.  Returns per-store deletion counts plus
+    ``codebook_residue`` (see below).
 
     **Codebook retention caveat (r12 ADVICE):** the codebook snapshot
     stores the TRAINING vectors' quantized embeddings VERBATIM — the
@@ -1432,22 +1394,14 @@ def forget_vectors_in_index(
     retraining the codebooks on survivors and rebuilding the store
     under a new version directory (the module-docstring rebuild
     path)."""
-    from kafkastreamsproject_spark.sources.bucketed import (
-        forget_keys_in_store,
-        forget_rows_in_store,
-    )
-
     geo = ann_geometry(spark, store_path)
-    n_buckets = geo["n_buckets"]
-    victims = vec_ids.select("vec_id").distinct().localCheckpoint(eager=True)
-
     coarse, cb = read_codebooks(spark, store_path)
     train_ids = (
         coarse.select(F.col("ccid").cast("long").alias("vec_id"))
         .union(cb.select(F.col("cid").cast("long").alias("vec_id")))
         .distinct()
     )
-    n_residue = victims.join(
+    n_residue = vec_ids.select("vec_id").distinct().join(
         F.broadcast(train_ids), "vec_id", "left_semi"
     ).count()
     if n_residue and not allow_codebook_residue:
@@ -1460,41 +1414,8 @@ def forget_vectors_in_index(
             "or retrain + rebuild the store for full erasure "
             "(streaming/annindex.py docstring)"
         )
-
-    c_path = _codes_path(store_path)
-    victim_keys = (
-        read_codes(spark, store_path, n_buckets)
-        .select("cell", "vec_id")
-        .join(F.broadcast(victims), "vec_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out = {
-        "codes": forget_rows_in_store(
-            spark, victim_keys, c_path,
-            store_table_name("ann_codes", c_path),
-            _CODES_SCHEMA, ["cell"], n_buckets,
-            match_cols=["cell", "vec_id"],
-        ),
-        "seen": forget_keys_in_store(
-            spark, victims, _seen_path(store_path),
-            store_table_name("ann_seen", _seen_path(store_path)),
-            _SEEN_SCHEMA, ["vec_id"], n_buckets,
-        ),
-        "codebook_residue": n_residue,
-    }
-    if has_vector_sidecar(spark, store_path):
-        # the sidecar holds the victims' quantized embeddings VERBATIM
-        # — erasing codes+ledger but not these rows would be the exact
-        # retention this function exists to prevent; same bucket-local
-        # (cell, vec_id) rewrite, same |victims|-bucket bound
-        v_path = _vecs_path(store_path)
-        out["vecs"] = forget_rows_in_store(
-            spark, victim_keys, v_path,
-            store_table_name("ann_vecs", v_path),
-            _VECS_SCHEMA, ["cell"], n_buckets,
-            match_cols=["cell", "vec_id"],
-        )
+    out = ks.forget(spark, ANN, vec_ids, store_path, geo["n_buckets"])
+    out["codebook_residue"] = n_residue
     return out
 
 
@@ -1519,37 +1440,17 @@ def upsert_vectors_in_index(
     the true fix is a retrain (:func:`rebuild_and_publish_ann_store`,
     which a bulk re-embedding should prefer anyway: new model ⇒ new
     distribution ⇒ the drift gauge climbs — see
-    :func:`codebook_drift`).  Crash window and convergence exactly as
-    the bm25 twin (`streaming/bm25index.py:upsert_docs_in_index`).
-    Returns the forget counts plus the fold counts.
-
-    RAISES when any arriving vec_id has a PENDING tombstone (r14
-    ADVICE): silently proceeding would lose the update — the forget
-    removes the seen row, the re-folded rows are anti-joined out of
-    every query by the pending set, and the next
-    :func:`apply_tombstones` physically deletes the NEW rows.  Run
-    apply_tombstones first (delete wins, then the upsert re-creates
-    the vector), the module's delete-then-reinsert ordering."""
-    ids = vectors.select("vec_id").distinct().localCheckpoint(eager=True)
-    pending = read_tombstones(spark, store_path)
-    if pending is not None:
-        n_pending = ids.join(F.broadcast(pending), "vec_id", "left_semi").count()
-        if n_pending:
-            raise ValueError(
-                f"{n_pending} arriving vec_id(s) have PENDING tombstones "
-                f"at {store_path} — upserting them now would be silently "
-                "swallowed by the pending set and the next apply.  Run "
-                "apply_tombstones first, then retry the upsert "
-                "(streaming/annindex.py:upsert_vectors_in_index)"
-            )
-    out = {
-        "forgotten": forget_vectors_in_index(
+    :func:`codebook_drift`).  Crash window, convergence and the
+    PENDING-tombstone refusal are ``keyedstore.upsert``'s.  Returns
+    the forget counts plus the fold counts."""
+    return ks.upsert(
+        spark, ANN, vectors, store_path,
+        lambda ids: forget_vectors_in_index(
             spark, ids, store_path,
             allow_codebook_residue=allow_codebook_residue,
-        )
-    }
-    out.update(ann_ingest_batch(vectors, store_path, geometry))
-    return out
+        ),
+        lambda batch: ann_ingest_batch(batch, store_path, geometry),
+    )
 
 
 def rebuild_and_publish_ann_store(
@@ -1598,32 +1499,6 @@ def rebuild_and_publish_ann_store(
 # Tombstone tier (r14): O(1) logical delete, physical at compaction
 # ---------------------------------------------------------------------------
 
-_TOMB_SCHEMA = "vec_id long"
-
-
-def _tomb_path(store_path: str) -> str:
-    return f"{store_path}/tombstones"
-
-
-def read_tombstones(
-    spark: SparkSession, store_path: str
-) -> DataFrame | None:
-    """The store's PENDING logical deletes as a one-column
-    (``vec_id``) DataFrame, or ``None`` when nothing is pending.
-    Replayed tombstone appends leave duplicate rows in the files; the
-    read de-duplicates, so the set is idempotent under crash-replay
-    by construction."""
-    from kafkastreamsproject_spark.operators.fs import hadoop_has_files
-
-    path = _tomb_path(store_path)
-    if not hadoop_has_files(spark, path):
-        return None
-    return (
-        spark.read.schema(_TOMB_SCHEMA).parquet(path)
-        .select("vec_id")
-        .distinct()
-    )
-
 
 def tombstone_vectors_in_index(
     spark: SparkSession, vec_ids: DataFrame, store_path: str
@@ -1656,21 +1531,7 @@ def tombstone_vectors_in_index(
     comfort (~10⁷ ids).  Returns {"tombstoned": n, "pending": total}.
     """
     check_ann_geometry(spark, store_path, None)  # store must exist
-    victims = (
-        vec_ids.select(F.col("vec_id").cast("long").alias("vec_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = victims.count()
-    if n:
-        victims.coalesce(1).write.mode("append").parquet(
-            _tomb_path(store_path)
-        )
-    pending = read_tombstones(spark, store_path)
-    return {
-        "tombstoned": n,
-        "pending": pending.count() if pending is not None else 0,
-    }
+    return ks.tombstone(spark, ANN, vec_ids, store_path)
 
 
 def apply_tombstones(
@@ -1687,29 +1548,16 @@ def apply_tombstones(
     forget, same codebook-residue guard (a pending training-member
     delete RAISES here unless ``allow_codebook_residue=True``; the
     full fix is :func:`rebuild_ann_store`, after which the old
-    store's tombstones are moot).  The tombstone files are removed
-    LAST, as the commit point: a crash after the rewrite but before
-    the clear replays the forget as a no-op and clears on the retry —
-    queries are correct throughout, since pending ids are excluded
-    whether or not their bytes are gone.  After apply, the erased ids
+    store's tombstones are moot).  The tombstone files go last
+    (``keyedstore.apply_tombstones``).  After apply, the erased ids
     are re-ingestable (their ``seen`` rows left with the rewrite).
 
     Returns the forget counts plus {"applied": n}; {"applied": 0}
     when nothing was pending."""
-    from kafkastreamsproject_spark.operators.fs import _fs_and_path
-
-    tombs = read_tombstones(spark, store_path)
-    if tombs is None:
-        return {"applied": 0}
-    victims = tombs.localCheckpoint(eager=True)
-    n = victims.count()
-    out = forget_vectors_in_index(
-        spark,
-        victims,
-        store_path,
-        allow_codebook_residue=allow_codebook_residue,
+    return ks.apply_tombstones(
+        spark, ANN, store_path,
+        lambda ids: forget_vectors_in_index(
+            spark, ids, store_path,
+            allow_codebook_residue=allow_codebook_residue,
+        ),
     )
-    fs, hpath = _fs_and_path(spark, _tomb_path(store_path))
-    fs.delete(hpath, True)
-    out["applied"] = n
-    return out

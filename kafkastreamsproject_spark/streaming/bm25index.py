@@ -27,23 +27,17 @@ two persistent stores folded per micro-batch:
   query probe reads only its terms' rows through a pushed
   ``t IN (...)`` filter; the scoring shuffle is ∝ matching postings.
 
-Idempotency & crash windows (the streaming/pipeline.py
-``_replay_safe_sink`` contract): a fully-applied epoch replayed through
-:func:`index_ingest_batch` is a no-op — the seen probe yields nothing,
-postings append nothing, and stats re-derive identically because they
-aggregate the (unchanged) seen store rather than folding a snapshot.
-The streaming form additionally skips replayed epochs via
-per-epoch markers, so the one non-atomic window — a crash
-AFTER the postings append and BEFORE the seen append, where a
-batch-level replay would re-append the same postings — is reachable
-only through the batch API; postings are written first because seen
-is the commit point (a doc not yet marked seen is fully re-indexed on
-replay; the reverse order would mark docs seen whose postings were
-never written — silent index loss).  A transactional table format
-would close the window; duplicate-doc ARRIVALS are dropped at
-document granularity — same doc_id in a later batch at the seen
-probe (first-writer-wins across batches), same doc_id twice in ONE
-batch at an intra-batch dropDuplicates before the probe (one
+Lifecycle: the stores are one :data:`BM25` spec of
+``streaming/keyedstore.py`` (key ``doc_id``; the ``seen`` ledger; the
+``postings`` and optional ``positions`` row substores), so reads,
+compaction, erasure, upsert and tombstones follow its four rules and
+its write order — rows first, the ledger last as the commit point.  A
+fully-applied epoch replayed through :func:`index_ingest_batch` is a
+no-op: the seen probe yields nothing, postings append nothing, and the
+stats delta writer skips its own record.  Duplicate-doc ARRIVALS are
+dropped at document granularity — same doc_id in a later batch at the
+seen probe (first-writer-wins across batches), same doc_id twice in
+ONE batch at an intra-batch dropDuplicates before the probe (one
 arbitrary representative — an unordered batch has no "first").
 
 Exactness: the maintained index scores BIT-IDENTICALLY to the batch
@@ -87,17 +81,25 @@ from pyspark.sql import functions as F
 from kafkastreamsproject_spark.functions import text as TX
 from kafkastreamsproject_spark.session import local_rows
 from kafkastreamsproject_spark.storeconfig import DEFAULTS
-from kafkastreamsproject_spark.sources.bucketed import (
-    append_bucketed_store,
-    compact_bucketed_store,
-    read_bucketed_store,
-    shuffle_scoped_to_buckets,
-    store_table_name,
-)
+from kafkastreamsproject_spark.sources.bucketed import shuffle_scoped_to_buckets
+from kafkastreamsproject_spark.streaming import keyedstore as ks
+from kafkastreamsproject_spark.streaming.keyedstore import KeyedIndex, Substore
 from kafkastreamsproject_spark.streaming.pipeline import _replay_safe_sink
 
-_POSTINGS_SCHEMA = "t string, doc_id long, tf long, dl long"
-_SEEN_SCHEMA = "doc_id long, dl long"
+_SEEN = Substore("seen", "doc_id long, dl long", ("doc_id",), "bm25_seen")
+_POSTINGS = Substore(
+    "postings", "t string, doc_id long, tf long, dl long", ("t",),
+    "bm25_postings",
+)
+#: the positional leg (phrase queries) — present once a fold ran with
+#: ``positional=True``
+_POSITIONS = Substore(
+    "positions", "t string, doc_id long, ps array<bigint>", ("t",),
+    "bm25_positions", optional=True,
+)
+BM25 = KeyedIndex("doc_id", _SEEN, (_POSTINGS, _POSITIONS))
+_postings_path = _POSTINGS.path
+
 #: default store width, sized for the test SF — the shared store
 #: config (storeconfig.py) holds the value and the sizing rule
 #: (at least the ingest parallelism, 128-512 MB per bucket).
@@ -206,32 +208,30 @@ def _apply_df_cap(
     )
 
 
-def _postings_path(store_path: str) -> str:
-    return f"{store_path}/postings"
-
-
-def _seen_path(store_path: str) -> str:
-    return f"{store_path}/seen"
-
-
 def read_postings(
     spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
-    path = _postings_path(store_path)
-    return read_bucketed_store(
-        spark, path, store_table_name("bm25_postings", path),
-        _POSTINGS_SCHEMA, ["t"], n_buckets,
-    )
+    return ks.read(spark, _POSTINGS, store_path, n_buckets)
 
 
 def read_seen(
     spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
-    path = _seen_path(store_path)
-    return read_bucketed_store(
-        spark, path, store_table_name("bm25_seen", path),
-        _SEEN_SCHEMA, ["doc_id"], n_buckets,
-    )
+    return ks.read(spark, _SEEN, store_path, n_buckets)
+
+
+def read_positions(
+    spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
+) -> DataFrame:
+    return ks.read(spark, _POSITIONS, store_path, n_buckets)
+
+
+def read_tombstones(
+    spark: SparkSession, store_path: str
+) -> DataFrame | None:
+    """The index's PENDING logical deletes (one ``doc_id`` column), or
+    ``None`` when nothing is pending."""
+    return ks.read_tombstones(spark, BM25, store_path)
 
 
 # ---------------------------------------------------------------------------
@@ -476,13 +476,9 @@ def index_ingest_batch(
             posts = _apply_df_cap(spark, posts, store_path, n_buckets, df_cap)
         posts = posts.localCheckpoint(eager=True)
 
-        # postings FIRST, seen second (the commit point) — module
-        # docstring has the crash-window analysis
-        p_path = _postings_path(store_path)
-        append_bucketed_store(
-            spark, posts, p_path, store_table_name("bm25_postings", p_path),
-            ["t"], n_buckets,
-        )
+        # postings FIRST, seen last (the commit point) — the
+        # streaming/keyedstore.py write order
+        ks.append(spark, _POSTINGS, posts, store_path, n_buckets)
         if positional:
             pos = doc_positional_postings(fresh)
             if df_cap is not None:
@@ -491,12 +487,7 @@ def index_ingest_batch(
                     posts.select("t", "doc_id"), ["t", "doc_id"], "left_semi"
                 )
             pos = pos.localCheckpoint(eager=True)
-            x_path = _positions_path(store_path)
-            append_bucketed_store(
-                spark, pos, x_path,
-                store_table_name("bm25_positions", x_path),
-                ["t"], n_buckets,
-            )
+            ks.append(spark, _POSITIONS, pos, store_path, n_buckets)
         # stats delta between the postings append and the seen commit
         # point: a crash on either side replays to the identical fresh
         # set (seen unchanged until the commit), so the delta writer's
@@ -508,10 +499,8 @@ def index_ingest_batch(
             _write_stats_delta(
                 spark, store_path, "a", rec.n, rec.s, rec.fp
             )
-        s_path = _seen_path(store_path)
-        append_bucketed_store(
-            spark, fresh.select("doc_id", "dl"), s_path,
-            store_table_name("bm25_seen", s_path), ["doc_id"], n_buckets,
+        ks.append(
+            spark, _SEEN, fresh.select("doc_id", "dl"), store_path, n_buckets
         )
     return {
         "docs_indexed": int(rec.n),
@@ -522,21 +511,12 @@ def index_ingest_batch(
 def compact_postings(
     spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
 ) -> int:
-    """Bound per-epoch small files in both stores (~1 file per bucket
-    after) and collapse the stats delta log to one snapshot; run
-    between epochs (single-writer window).  Returns the postings
-    store's data-file count after compaction."""
+    """Bound per-epoch small files in every store of the index (~1
+    file per bucket after) and collapse the stats delta log to one
+    snapshot; run between epochs (single-writer window).  Returns the
+    postings store's data-file count after compaction."""
     _merge_stats_deltas(spark, store_path)
-    s_path = _seen_path(store_path)
-    compact_bucketed_store(
-        spark, s_path, store_table_name("bm25_seen", s_path),
-        _SEEN_SCHEMA, ["doc_id"], n_buckets,
-    )
-    p_path = _postings_path(store_path)
-    return compact_bucketed_store(
-        spark, p_path, store_table_name("bm25_postings", p_path),
-        _POSTINGS_SCHEMA, ["t"], n_buckets,
-    )
+    return ks.compact(spark, BM25, store_path, n_buckets)
 
 
 def _score_expr(n_terms: int) -> Column:
@@ -781,9 +761,6 @@ def to_index_ingest_sink(
 # intersection, never a text rescan.
 # ---------------------------------------------------------------------------
 
-_POSITIONS_SCHEMA = "t string, doc_id long, ps array<bigint>"
-
-
 def doc_positional_postings(docs: DataFrame) -> DataFrame:
     """(t, doc_id, ps) — sorted 0-based token positions per distinct
     (term, doc).  sort_array pins collect_list's arrival order, so the
@@ -797,20 +774,6 @@ def doc_positional_postings(docs: DataFrame) -> DataFrame:
                 F.collect_list(F.col("pos").cast("long"))
             ).alias("ps")
         )
-    )
-
-
-def _positions_path(store_path: str) -> str:
-    return f"{store_path}/positions"
-
-
-def read_positions(
-    spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
-) -> DataFrame:
-    path = _positions_path(store_path)
-    return read_bucketed_store(
-        spark, path, store_table_name("bm25_positions", path),
-        _POSITIONS_SCHEMA, ["t"], n_buckets,
     )
 
 
@@ -869,9 +832,11 @@ def phrase_query_index(
 
 
 # ---------------------------------------------------------------------------
-# Right-to-be-forgotten: erase documents FROM THE INDEX.  A GDPR
-# deletion that scrubs the corpus but leaves the serving index intact
-# still serves the content; this reaches into all three stores.
+# Right-to-be-forgotten, reindex-upsert and the tombstone tier: the
+# streaming/keyedstore.py lifecycle over the BM25 spec.  A pending
+# tombstone is excluded from term probes, phrase probes, AND the
+# N/avgdl/df statistics, so every surviving doc scores exactly as it
+# will after the physical apply (the bm25_tombstone_delete oracle).
 # ---------------------------------------------------------------------------
 
 
@@ -880,82 +845,40 @@ def forget_docs_in_index(
     doc_ids: DataFrame,
     store_path: str,
     n_buckets: int = N_BUCKETS,
-    positional: bool = False,
 ) -> dict:
     """Erase ``doc_ids`` (one column, ``doc_id``) from the index: their
-    postings rows (and positional rows with ``positional=True``) leave
-    the term-bucketed stores via a bucket-local (t, doc_id) row-level
-    forget, and their seen-ledger rows via the key-level forget — which
-    is also what shrinks N/avgdl, since corpus stats derive from the
-    ledger.  Afterward the index scores EXACTLY like one built from
-    the surviving corpus (the index_forget_replay oracle), and the
-    erased doc_ids become re-indexable (first-writer-wins restarts).
+    postings and positional rows leave the term-bucketed stores via a
+    bucket-local (t, doc_id) row-level forget, and their seen-ledger
+    rows last — after a negative stats delta, so N/avgdl shrink too.
+    Afterward the index scores EXACTLY like one built from the
+    surviving corpus (the index_forget_replay oracle), and the erased
+    doc_ids become re-indexable (first-writer-wins restarts).
 
     The victims' (t, doc_id) keys come from a column-pruned scan of
-    the postings store itself (16 B/row, no text needed) — the price
-    of not keeping a forward doc→terms index; an erasure-heavy
-    deployment would maintain one (same bucketed machinery, keyed on
-    doc_id).  Write order mirrors ingest in reverse: postings leave
-    FIRST, the seen row last — a crash mid-erasure leaves the doc
-    counted but unsearchable (an empty doc, consistent), never
-    searchable but uncounted.  Replaying a completed or partial
-    erasure is a no-op.  Single-writer maintenance op: run between
-    epochs.  Returns per-store deletion counts."""
-    from kafkastreamsproject_spark.sources.bucketed import (
-        forget_keys_in_store,
-        forget_rows_in_store,
-    )
+    each term-bucketed store itself (16 B/row, no text needed) — the
+    price of not keeping a forward doc→terms index.  Crash and replay
+    behaviour: the keyedstore rules.  Returns per-store deletion
+    counts."""
 
-    victims = doc_ids.select("doc_id").distinct().localCheckpoint(eager=True)
+    def stats_delta(victims: DataFrame) -> None:
+        # negative stats delta from the PRE-forget ledger, written
+        # before the seen rewrite: a crash between the two replays to
+        # the same removed set (the ledger rows are still there), so
+        # the delta writer's fingerprint skip holds — see the stats
+        # block comment
+        rec = _stats_record(
+            read_seen(spark, store_path, n_buckets).join(
+                F.broadcast(victims), "doc_id", "left_semi"
+            )
+        )
+        if rec.n:
+            _write_stats_delta(
+                spark, store_path, "f", -rec.n, -rec.s, rec.fp
+            )
 
-    p_path = _postings_path(store_path)
-    victim_keys = (
-        read_postings(spark, store_path, n_buckets)
-        .select("t", "doc_id")
-        .join(F.broadcast(victims), "doc_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+    return ks.forget(
+        spark, BM25, doc_ids, store_path, n_buckets, before_ledger=stats_delta
     )
-    out = {
-        "postings": forget_rows_in_store(
-            spark, victim_keys, p_path,
-            store_table_name("bm25_postings", p_path),
-            _POSTINGS_SCHEMA, ["t"], n_buckets, match_cols=["t", "doc_id"],
-        )
-    }
-    if positional:
-        x_path = _positions_path(store_path)
-        pos_keys = (
-            read_positions(spark, store_path, n_buckets)
-            .select("t", "doc_id")
-            .join(F.broadcast(victims), "doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        out["positions"] = forget_rows_in_store(
-            spark, pos_keys, x_path,
-            store_table_name("bm25_positions", x_path),
-            _POSITIONS_SCHEMA, ["t"], n_buckets,
-            match_cols=["t", "doc_id"],
-        )
-    # negative stats delta from the PRE-forget ledger, written before
-    # the seen rewrite: a crash between the two replays to the same
-    # removed set (the ledger rows are still there), so the delta
-    # writer's fingerprint skip holds — see the stats block comment
-    removed = read_seen(spark, store_path, n_buckets).join(
-        F.broadcast(victims), "doc_id", "left_semi"
-    )
-    rec = _stats_record(removed)
-    if rec.n:
-        _write_stats_delta(
-            spark, store_path, "f", -rec.n, -rec.s, rec.fp
-        )
-    s_path = _seen_path(store_path)
-    out["seen"] = forget_keys_in_store(
-        spark, victims, s_path, store_table_name("bm25_seen", s_path),
-        _SEEN_SCHEMA, ["doc_id"], n_buckets,
-    )
-    return out
 
 
 def upsert_docs_in_index(
@@ -963,102 +886,33 @@ def upsert_docs_in_index(
     docs: DataFrame,
     store_path: str,
     n_buckets: int = N_BUCKETS,
-    positional: bool = False,
     df_cap: int | None = None,
 ) -> dict:
     """REINDEX arriving documents — the recrawl/CDC shape the
     first-writer-wins ingest contract deliberately excludes: a doc_id
     already in the ledger is DROPPED by :func:`index_ingest_batch`
     (correct for replay/duplicate delivery, wrong for a re-crawled
-    page whose text changed).  This op updates instead: the arriving
-    doc_ids' existing postings/positions/ledger rows leave via
-    :func:`forget_docs_in_index` (a no-op for genuinely-new ids), then
-    the batch folds as fresh — afterward the index scores EXACTLY like
-    one built from the updated corpus (the ``bm25_reindex_upsert``
-    oracle).
-
-    Crash window: forget completes, ingest doesn't → the doc is
-    absent-but-consistent (the mid-erasure state the forget docstring
-    documents); replaying the upsert re-runs the forget as a no-op and
-    re-folds the batch, so the op CONVERGES under at-least-once
-    delivery — unlike raw ingest-after-manual-forget, where a replayed
-    ingest against an already-updated ledger silently drops the new
-    text.  Single-writer maintenance op, like everything that rewrites
-    store rows.  Cost ∝ the arriving docs' terms' buckets (the forget
-    bound) + the normal fold.  With ``df_cap`` set, the fold re-enters
-    the cap gate at the POST-forget df — a term the old version had
-    capped out may admit the recrawl — so a capped index under upserts
-    is deterministic given the operation history, no longer a pure
-    function of the final corpus (plain capped folds' first-writers-
-    win guarantee assumed append-only).  Returns the forget counts
-    plus the fold counts.
-
-    RAISES when any arriving doc_id has a PENDING tombstone (r14
-    ADVICE): silently proceeding would lose the update — the forget
-    removes the seen row (bypassing the 're-ingest blocked until
-    apply' invariant), the re-folded rows are anti-joined out of
-    every query by the pending set, and the next
-    :func:`apply_tombstones` physically deletes the NEW rows.  The
-    caller resolves the race explicitly: :func:`apply_tombstones`
-    first (delete wins, then the upsert re-creates the doc), which is
-    the module's documented delete-then-reinsert ordering."""
-    ids = docs.select("doc_id").distinct().localCheckpoint(eager=True)
-    pending = read_tombstones(spark, store_path)
-    if pending is not None:
-        n_pending = ids.join(F.broadcast(pending), "doc_id", "left_semi").count()
-        if n_pending:
-            raise ValueError(
-                f"{n_pending} arriving doc_id(s) have PENDING tombstones "
-                f"at {store_path} — upserting them now would be silently "
-                "swallowed by the pending set and the next apply.  Run "
-                "apply_tombstones first, then retry the upsert "
-                "(streaming/bm25index.py:upsert_docs_in_index)"
-            )
-    out = {
-        "forgotten": forget_docs_in_index(
-            spark, ids, store_path, n_buckets, positional=positional
-        )
-    }
-    out.update(
-        index_ingest_batch(
-            docs, store_path, n_buckets,
-            positional=positional, df_cap=df_cap,
-        )
-    )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Tombstone tier (r14): O(1) logical delete, physical at compaction —
-# the annindex tombstone model on the text side.  A pending doc is
-# excluded from term probes, phrase probes, AND the N/avgdl/df
-# statistics, so every surviving doc scores exactly as it will after
-# the physical apply (observational equivalence is the contract the
-# bm25_tombstone_delete oracle checks).
-# ---------------------------------------------------------------------------
-
-_TOMB_SCHEMA = "doc_id long"
-
-
-def _tomb_path(store_path: str) -> str:
-    return f"{store_path}/tombstones"
-
-
-def read_tombstones(
-    spark: SparkSession, store_path: str
-) -> DataFrame | None:
-    """The index's PENDING logical deletes as a one-column
-    (``doc_id``) DataFrame, or ``None`` when nothing is pending.
-    Duplicate rows from replayed appends de-duplicate at read."""
-    from kafkastreamsproject_spark.operators.fs import hadoop_has_files
-
-    path = _tomb_path(store_path)
-    if not hadoop_has_files(spark, path):
-        return None
-    return (
-        spark.read.schema(_TOMB_SCHEMA).parquet(path)
-        .select("doc_id")
-        .distinct()
+    page whose text changed).  This op updates instead
+    (``keyedstore.upsert``): the arriving doc_ids leave via
+    :func:`forget_docs_in_index`, then the batch folds as fresh —
+    positionally when the index has a positional store — and the
+    index scores EXACTLY like one built from the updated corpus (the
+    ``bm25_reindex_upsert`` oracle).  Cost ∝ the arriving docs'
+    terms' buckets (the forget bound) + the normal fold.  With
+    ``df_cap`` set, the fold re-enters the cap gate at the POST-forget
+    df — a term the old version had capped out may admit the recrawl —
+    so a capped index under upserts is deterministic given the
+    operation history, no longer a pure function of the final corpus.
+    RAISES when an arriving doc_id has a PENDING tombstone (run
+    :func:`apply_tombstones` first).  Returns the forget counts plus
+    the fold counts."""
+    positional = ks.takes_part(spark, _POSITIONS, store_path, n_buckets)
+    return ks.upsert(
+        spark, BM25, docs, store_path,
+        lambda ids: forget_docs_in_index(spark, ids, store_path, n_buckets),
+        lambda batch: index_ingest_batch(
+            batch, store_path, n_buckets, positional=positional, df_cap=df_cap
+        ),
     )
 
 
@@ -1066,68 +920,32 @@ def tombstone_docs_in_index(
     spark: SparkSession, doc_ids: DataFrame, store_path: str
 ) -> dict:
     """LOGICAL delete: append ``doc_ids`` (one column, ``doc_id``) to
-    the pending set — one tiny parquet append, O(|victims|) regardless
-    of index size.  From the next query on the victims are invisible
-    EVERYWHERE: no term-probe hit, no phrase hit, no df contribution,
-    no N/avgdl contribution — BM25 is a corpus-statistics scorer, so
-    hiding a doc from results while leaving it in the statistics
-    would quietly mis-score every survivor until compaction; the
-    pending set therefore excludes at both seams
-    (:func:`query_index`'s probe AND :func:`corpus_stats`).
+    the pending set (``keyedstore.tombstone``).  From the next query on
+    the victims are invisible EVERYWHERE: no term-probe hit, no phrase
+    hit, no df contribution, no N/avgdl contribution — BM25 is a
+    corpus-statistics scorer, so hiding a doc from results while
+    leaving it in the statistics would quietly mis-score every
+    survivor until compaction; the pending set therefore excludes at
+    both seams (:func:`query_index`'s probe AND :func:`corpus_stats`).
 
     Re-ingest of a pending id stays blocked (its seen row persists
     until apply) — delete-then-reinsert completes only after
-    :func:`apply_tombstones`, the unambiguous ordering.  The pending
-    set broadcasts at query time; apply on the compaction cadence
-    keeps it driver-bounded.  One physical-store property the pending
-    set does NOT touch: the append-time df cap counts a pending doc's
-    rows until apply (the cap is first-writers-win over BYTES in the
-    store, and those bytes are still there) — capped-index
+    :func:`apply_tombstones`.  The append-time df cap counts a pending
+    doc's rows until apply (the cap is first-writers-win over BYTES
+    in the store, and those bytes are still there), so capped-index
     determinism survives deletes unchanged.  Returns
-    {"tombstoned": n, "pending": m}.
-    """
-    victims = (
-        doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = victims.count()
-    if n:
-        victims.coalesce(1).write.mode("append").parquet(
-            _tomb_path(store_path)
-        )
-    pending = read_tombstones(spark, store_path)
-    return {
-        "tombstoned": n,
-        "pending": pending.count() if pending is not None else 0,
-    }
+    {"tombstoned": n, "pending": m}."""
+    return ks.tombstone(spark, BM25, doc_ids, store_path)
 
 
 def apply_tombstones(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = N_BUCKETS,
-    positional: bool = False,
+    spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
 ) -> dict:
-    """Make the pending logical deletes PHYSICAL and clear the set —
-    delegates to :func:`forget_docs_in_index` (bucket-local postings/
-    positions rewrite, ledger forget), then removes the tombstone
-    files LAST as the commit point: a crash after the rewrite replays
-    the forget as a no-op and clears on retry, and queries are correct
-    throughout because pending ids are excluded whether or not their
-    bytes are gone.  After apply the erased ids are re-indexable.
-    Returns the forget counts plus {"applied": n}."""
-    from kafkastreamsproject_spark.operators.fs import _fs_and_path
-
-    tombs = read_tombstones(spark, store_path)
-    if tombs is None:
-        return {"applied": 0}
-    victims = tombs.localCheckpoint(eager=True)
-    n = victims.count()
-    out = forget_docs_in_index(
-        spark, victims, store_path, n_buckets, positional=positional
+    """Make the pending logical deletes PHYSICAL through
+    :func:`forget_docs_in_index` and clear the set last
+    (``keyedstore.apply_tombstones``).  After apply the erased ids are
+    re-indexable.  Returns the forget counts plus {"applied": n}."""
+    return ks.apply_tombstones(
+        spark, BM25, store_path,
+        lambda ids: forget_docs_in_index(spark, ids, store_path, n_buckets),
     )
-    fs, hpath = _fs_and_path(spark, _tomb_path(store_path))
-    fs.delete(hpath, True)
-    out["applied"] = n
-    return out

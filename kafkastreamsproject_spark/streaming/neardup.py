@@ -53,6 +53,7 @@ from kafkastreamsproject_spark.functions import text as TX
 from kafkastreamsproject_spark.operators.fs import (
     _fs_and_path,
     hadoop_has_files,
+    hadoop_restore_swapped,
     hadoop_swap_dir,
 )
 from kafkastreamsproject_spark.session import local_rows
@@ -179,7 +180,9 @@ def jaccard_confirm(
 def _read_store(spark: SparkSession, sig_path: str) -> DataFrame:
     # Hadoop FS probe, not os.path: the store may be a remote URI, and a
     # driver-local check would silently treat it as absent (first batch
-    # overwrites-from-empty instead of merging).
+    # overwrites-from-empty instead of merging).  An interrupted
+    # compaction swap is undone first (operators/fs.py).
+    hadoop_restore_swapped(spark, sig_path)
     if hadoop_has_files(spark, sig_path):
         return spark.read.schema(_SIG_SCHEMA).parquet(sig_path)
     return local_rows(spark, _SIG_SCHEMA)

@@ -31,66 +31,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafkastreamsproject_spark.session import local_rows
-
-
-def _stat_row(spark, name: str, df: DataFrame | None, files: int):
-    n = 0 if df is None else df.count()
-    return local_rows(
-        spark,
-        "substore string, rows long, data_files int",
-        [(name, int(n), int(files))],
-    )
+from kafkastreamsproject_spark.streaming import keyedstore as ks
 
 
 def ann_store_stats(spark: SparkSession, store_path: str) -> DataFrame:
     """One row per substore of the ANN index at ``store_path``:
-    codes, seen, the vecs sidecar (when present), and pending
+    codes, seen, the vecs sidecar (when it holds files), and pending
     tombstones.  Codebook snapshots are geometry-sized (C + M·K rows
     by construction) and excluded."""
-    from kafkastreamsproject_spark.operators.fs import hadoop_count_files
-    from kafkastreamsproject_spark.streaming.annindex import (
-        _codes_path,
-        _seen_path,
-        _tomb_path,
-        _vecs_path,
-        ann_geometry,
-        has_vector_sidecar,
-        read_codes,
-        read_seen,
-        read_tombstones,
-        read_vecs,
-    )
+    from kafkastreamsproject_spark.streaming.annindex import ANN, ann_geometry
 
-    geo = ann_geometry(spark, store_path)
-    nb = geo["n_buckets"]
-    parts = [
-        _stat_row(
-            spark, "codes", read_codes(spark, store_path, nb),
-            hadoop_count_files(spark, _codes_path(store_path)),
-        ),
-        _stat_row(
-            spark, "seen", read_seen(spark, store_path, nb),
-            hadoop_count_files(spark, _seen_path(store_path)),
-        ),
-    ]
-    if has_vector_sidecar(spark, store_path):
-        parts.append(
-            _stat_row(
-                spark, "vecs", read_vecs(spark, store_path, nb),
-                hadoop_count_files(spark, _vecs_path(store_path)),
-            )
-        )
-    parts.append(
-        _stat_row(
-            spark, "tombstones", read_tombstones(spark, store_path),
-            hadoop_count_files(spark, _tomb_path(store_path)),
-        )
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    nb = ann_geometry(spark, store_path)["n_buckets"]
+    return ks.store_stats(spark, ANN, store_path, nb)
 
 
 def bm25_store_stats(
@@ -102,61 +54,10 @@ def bm25_store_stats(
     its own ``_store_meta.json`` (r14 ADVICE: the previous hardcoded
     default width made ``check_store_meta`` raise for any index
     created at a non-default width — the ops readout failed exactly
-    on the large stores it targets), the way :func:`ann_store_stats`
-    reads the geometry sidecar."""
-    from kafkastreamsproject_spark.operators.fs import (
-        hadoop_count_files,
-        hadoop_has_files,
-    )
-    from kafkastreamsproject_spark.sources.bucketed import read_store_meta
-    from kafkastreamsproject_spark.streaming.bm25index import (
-        N_BUCKETS,
-        _positions_path,
-        _postings_path,
-        _seen_path,
-        _tomb_path,
-        read_positions,
-        read_postings,
-        read_seen,
-        read_tombstones,
-    )
+    on the large stores it targets)."""
+    from kafkastreamsproject_spark.streaming.bm25index import BM25, N_BUCKETS
 
-    def _width(path: str) -> int:
-        meta = read_store_meta(spark, path)
-        return meta["n_buckets"] if meta else N_BUCKETS
-
-    parts = [
-        _stat_row(
-            spark, "postings",
-            read_postings(spark, store_path, _width(_postings_path(store_path))),
-            hadoop_count_files(spark, _postings_path(store_path)),
-        ),
-        _stat_row(
-            spark, "seen",
-            read_seen(spark, store_path, _width(_seen_path(store_path))),
-            hadoop_count_files(spark, _seen_path(store_path)),
-        ),
-    ]
-    if hadoop_has_files(spark, _positions_path(store_path)):
-        parts.append(
-            _stat_row(
-                spark, "positions",
-                read_positions(
-                    spark, store_path, _width(_positions_path(store_path))
-                ),
-                hadoop_count_files(spark, _positions_path(store_path)),
-            )
-        )
-    parts.append(
-        _stat_row(
-            spark, "tombstones", read_tombstones(spark, store_path),
-            hadoop_count_files(spark, _tomb_path(store_path)),
-        )
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return ks.store_stats(spark, BM25, store_path, N_BUCKETS)
 
 
 def describe_store(
@@ -171,15 +72,13 @@ def describe_store(
         hadoop_has_files,
     )
     from kafkastreamsproject_spark.streaming.annindex import _GEO_FILE
-    from kafkastreamsproject_spark.streaming.bm25index import (
-        _postings_path,
-    )
+    from kafkastreamsproject_spark.streaming.bm25index import _POSTINGS
 
     if hadoop_exists(spark, f"{store_path}/{_GEO_FILE}"):
         return ann_store_stats(spark, store_path).select(
             F.lit("ann").alias("store"), "*"
         )
-    if hadoop_has_files(spark, _postings_path(store_path)):
+    if hadoop_has_files(spark, _POSTINGS.path(store_path)):
         return bm25_store_stats(spark, store_path).select(
             F.lit("bm25").alias("store"), "*"
         )

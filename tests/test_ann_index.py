@@ -276,6 +276,44 @@ def test_forget_vectors_is_exact_and_reindexable(spark, tmp_path):
     assert back["vecs_indexed"] == 1
 
 
+def test_forget_replay_reaches_the_vecs_sidecar(spark, tmp_path, monkeypatch):
+    """An erasure that crashes before its vecs rewrite and is then
+    replayed must still erase the victim's quantized embedding: each
+    row substore finds its victims in its own rows, and the ledger
+    goes last."""
+    import kafkastreamsproject_spark.sources.bucketed as bucketed
+    from kafkastreamsproject_spark.streaming.annindex import (
+        default_geometry,
+        forget_vectors_in_index,
+        read_vecs,
+    )
+
+    store = str(tmp_path / "vecs_replay")
+    corpus = _emb(spark, 0, 40)
+    create_ann_store(
+        spark, store, corpus, **default_geometry(), store_vectors=True
+    )
+    ann_ingest_batch(corpus, store)
+
+    real, crashed = bucketed.forget_rows_in_store, []
+
+    def crash_before_vecs(spark, keys, path, *args, **kwargs):
+        if path.endswith("/vecs") and not crashed:
+            crashed.append(path)
+            raise RuntimeError("crash before the vecs rewrite")
+        return real(spark, keys, path, *args, **kwargs)
+
+    monkeypatch.setattr(bucketed, "forget_rows_in_store", crash_before_vecs)
+    victims = spark.createDataFrame([(25,)], "vec_id long")
+    with pytest.raises(RuntimeError, match="vecs rewrite"):
+        forget_vectors_in_index(spark, victims, store)
+    forget_vectors_in_index(spark, victims, store)
+    monkeypatch.undo()
+
+    for read in (read_vecs, read_codes, read_seen):
+        assert read(spark, store).filter(F.col("vec_id") == 25).count() == 0
+
+
 def test_forget_codebook_training_vector_requires_acknowledgement(
     spark, tmp_path
 ):

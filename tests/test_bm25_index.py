@@ -316,9 +316,7 @@ def test_forget_docs_is_bucket_local_and_reindexable(spark, tmp_path):
     victims = spark.createDataFrame([(3,)], "doc_id long")
     before_files = files(store, "postings")
 
-    res = forget_docs_in_index(
-        spark, victims, store, positional=True
-    )
+    res = forget_docs_in_index(spark, victims, store)
     assert res["postings"]["rows_deleted"] == 2  # victim, beta
     assert res["seen"]["rows_deleted"] == 1
 
@@ -346,7 +344,7 @@ def test_forget_docs_is_bucket_local_and_reindexable(spark, tmp_path):
     assert got_phrase == {}
 
     # (d) replay: no-op
-    res2 = forget_docs_in_index(spark, victims, store, positional=True)
+    res2 = forget_docs_in_index(spark, victims, store)
     assert res2["postings"]["rows_deleted"] == 0
     assert res2["seen"]["rows_deleted"] == 0
 
@@ -607,7 +605,9 @@ def test_apply_tombstones_is_physical_invisible_and_idempotent(
 ):
     """apply_tombstones: same scores before and after, postings bytes
     gone, pending set cleared LAST, replay a no-op, id re-indexable;
-    the positional store leaves with positional=True."""
+    the positional store leaves too — it holds rows, so it takes part
+    without a flag, and an erased doc never comes back to a phrase
+    query."""
     from kafkastreamsproject_spark.streaming.bm25index import (
         apply_tombstones,
         phrase_query_index,
@@ -629,7 +629,7 @@ def test_apply_tombstones_is_physical_invisible_and_idempotent(
     } == set()
 
     logical = _scores(query_index(spark, store, TERMS))
-    out = apply_tombstones(spark, store, positional=True)
+    out = apply_tombstones(spark, store)
     assert out["applied"] == 2
     assert out["postings"]["rows_deleted"] > 0
     assert out["seen"]["rows_deleted"] == 2
@@ -640,6 +640,10 @@ def test_apply_tombstones_is_physical_invisible_and_idempotent(
     assert read_positions(spark, store).filter(
         F.col("doc_id").isin([1, 4])
     ).count() == 0
+    assert {
+        r.doc_id
+        for r in phrase_query_index(spark, store, ("alpha", "beta")).collect()
+    }.isdisjoint({1, 4})
     assert _scores(query_index(spark, store, TERMS)) == logical
     assert apply_tombstones(spark, store) == {"applied": 0}
 
