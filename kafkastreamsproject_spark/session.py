@@ -12,6 +12,23 @@ so the same code runs unchanged on a multi-executor cluster:
 - Arrow enabled: every Pandas-UDF boundary is Arrow-batched, never
   row-at-a-time pickling.
 
+One process rule is decided here, before the JVM starts:
+
+- **Worker interpreter.** Spark puts ``$SPARK_HOME/python/lib/pyspark.zip``
+  first on every Python process's ``PYTHONPATH``.  That zip holds
+  sources only, so each cold process (the daemons, the data-source
+  planners, the streaming source runners) compiles pyspark again —
+  about 1 s on a 4-core host — and every task's
+  ``importlib.invalidate_caches()`` re-reads the zip's directory.  When
+  :func:`get_spark` starts the JVM for a ``local`` master, it names
+  ``worker_python.sh`` as ``PYSPARK_PYTHON``: the launcher drops the
+  zip from ``PYTHONPATH`` and execs the driver's interpreter, so every
+  Python process imports the pyspark the driver runs, with its
+  bytecode.  It does so only if the zip's ``pyspark/version.py``
+  equals the driver's and ``PYSPARK_PYTHON`` is unset or runs the
+  driver's interpreter (:func:`worker_launcher`); otherwise, and on
+  any other master, Spark's stock path stays.
+
 Two streaming rules live outside this factory, at query start:
 
 - **State width.** The topologies' stateful operators keep their state
@@ -36,13 +53,70 @@ store's empty relation, the BM25 corpus-stats row) come from
 from __future__ import annotations
 
 import os
+import sys
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 #: shuffle width the streaming sinks start their queries with, which a
 #: new checkpoint keeps as its state-partition count (see module doc)
 STATE_PARTITIONS = 1
+
+
+#: the worker interpreter of a local session (see module doc)
+WORKER_LAUNCHER = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "worker_python.sh"
+)
+
+
+def _runs_driver_python(python: str | None) -> bool:
+    """True iff the interpreter command ``python`` (None: unset) runs
+    the driver's interpreter: the same binary under the same prefix
+    (a venv's interpreter is a link to its base's).  The command itself
+    is asked, so a shim or a wrapper resolves as it does for Spark."""
+    import subprocess
+
+    if not python:
+        return True
+    probe = "import os, sys; print(os.path.realpath(sys.executable), sys.prefix)"
+    try:
+        out = subprocess.run(
+            [python, "-c", probe], capture_output=True, text=True, timeout=60
+        ).stdout
+    except (OSError, subprocess.SubprocessError):
+        return False
+    return out.strip() == f"{os.path.realpath(sys.executable)} {sys.prefix}"
+
+
+def worker_launcher(
+    master: str, spark_home: str | None = None, env=os.environ
+) -> str | None:
+    """The launcher a session on ``master`` should name as its worker
+    interpreter, or None for Spark's stock path (module doc, "worker
+    interpreter").  ``spark_home`` defaults to the one the JVM will
+    use; ``env`` is read for ``PYSPARK_PYTHON``."""
+    import re
+    import zipfile
+
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    local = re.fullmatch(r"local(\[[^\]]*\])?", master)
+    if not local or not os.access(WORKER_LAUNCHER, os.X_OK):
+        return None
+    home = spark_home or _find_spark_home()
+    try:
+        with zipfile.ZipFile(os.path.join(home, "python", "lib", "pyspark.zip")) as z:
+            shipped = z.read("pyspark/version.py")
+        here = os.path.dirname(pyspark.__file__)
+        with open(os.path.join(here, "version.py"), "rb") as f:
+            own = f.read()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+    if shipped == own and _runs_driver_python(env.get("PYSPARK_PYTHON")):
+        return WORKER_LAUNCHER
+    return None
 
 
 #: Connector coordinates matched to the installed PySpark (4.x, Scala
@@ -89,6 +163,10 @@ def get_spark(
         builder = builder.config("spark.jars.packages", _kafka_packages())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # The JVM copies the environment when it starts, and Spark reads the
+    # worker interpreter from it (module doc, "worker interpreter").
+    if SparkContext._gateway is None and (launcher := worker_launcher(master)):
+        os.environ.update(PYSPARK_PYTHON=launcher, _SPARK_GRAFT_PYTHON=sys.executable)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

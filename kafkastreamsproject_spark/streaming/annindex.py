@@ -180,6 +180,17 @@ def ann_geometry(spark: SparkSession, store_path: str) -> dict:
     return geo
 
 
+def _ann_store_exists(spark: SparkSession, store_path: str) -> bool:
+    """True iff ``store_path`` holds an ANN store: its geometry sidecar,
+    or files under ``codes/`` (a store predating the sidecar).  Reads
+    only, unlike :func:`ann_geometry`, which stamps a missing sidecar."""
+    from kafkastreamsproject_spark.operators.fs import hadoop_exists, hadoop_has_files
+
+    return hadoop_exists(spark, f"{store_path}/{_GEO_FILE}") or hadoop_has_files(
+        spark, _CODES.path(store_path)
+    )
+
+
 def check_ann_geometry(
     spark: SparkSession, store_path: str, expect: dict | None
 ) -> dict:
@@ -1530,7 +1541,8 @@ def tombstone_vectors_in_index(
     return value is the gauge; apply when it grows past broadcast
     comfort (~10⁷ ids).  Returns {"tombstoned": n, "pending": total}.
     """
-    check_ann_geometry(spark, store_path, None)  # store must exist
+    if not _ann_store_exists(spark, store_path):
+        raise ValueError(f"no ANN store at {store_path}")
     return ks.tombstone(spark, ANN, vec_ids, store_path)
 
 

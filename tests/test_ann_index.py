@@ -922,6 +922,23 @@ def test_tombstone_is_instant_and_fills_k_from_survivors(spark, tmp_path):
     assert replay == {"tombstoned": 1, "pending": 1}
 
 
+def test_tombstone_on_a_path_without_a_store_raises_and_writes_nothing(
+    spark, tmp_path
+):
+    """The store-must-exist check only reads: tombstoning a fresh path
+    raises and leaves no geometry sidecar or tombstone set behind."""
+    from kafkastreamsproject_spark.streaming.annindex import (
+        tombstone_vectors_in_index,
+    )
+
+    path = tmp_path / "nostore"
+    with pytest.raises(ValueError, match="no ANN store"):
+        tombstone_vectors_in_index(
+            spark, spark.range(2).withColumnRenamed("id", "vec_id"), str(path)
+        )
+    assert not path.exists()
+
+
 def test_apply_tombstones_is_physical_idempotent_and_reingestable(
     spark, tmp_path
 ):
