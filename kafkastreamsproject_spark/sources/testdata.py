@@ -4,19 +4,55 @@ Parquet is the engine's canonical batch format: columnar, splittable,
 predicate-pushdown-able.  At 100 TB these reads are the dominant cost, so
 nothing here materializes or caches by default — callers compose lazy
 DataFrames and Catalyst prunes columns/row-groups from the final plan.
+
+Schema once per process: a parquet read without a schema makes Spark
+infer one with a one-task job, on every call, even for a single file.
+:func:`load_table` keeps the schema Spark inferred for each table and
+hands it back to ``spark.read.schema(...)`` while the table is
+unchanged, so a rebuilt query plans its reads without a job.  The memo
+key is the table file's absolute path, its size and ``mtime_ns`` —
+the key the mock-broker reader uses for its parsed segments — and
+the two session confs besides the pinned ones that change what
+inference returns (``spark.sql.parquet.binaryAsString``/
+``int96AsTimestamp``).  It assumes local files whose timestamps have
+nanosecond resolution: a rewrite that keeps a file's size within one
+timestamp tick would be read with the old schema.  A table stored as a
+directory, or a path ``os.stat`` cannot see (a remote URI), infers on
+every call, as without the memo.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kafkastreamsproject_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: the session confs, besides the two load_table pins, whose value
+#: changes the inferred schema
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+#: (absolute path, _SCHEMA_CONFS values) -> (_file_key, inferred schema)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_key(path: str) -> tuple | None:
+    """A table file's (size, mtime_ns); None for a directory or a path
+    ``os.stat`` cannot see."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_size, st.st_mtime_ns) if stat.S_ISREG(st.st_mode) else None
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -38,9 +74,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     3. a defensive NTZ→TIMESTAMP cast in case a future Spark ignores (1).
     """
     sf_dir = sf_dir or DEFAULT_SF_DIR
+    path = os.path.join(sf_dir, f"{name}.parquet")
     # Both read-path confs are consumed at ANALYSIS time (schema
-    # inference), so setting them only around the read() call below is
-    # sufficient — but neither has a per-reader option form, so
+    # inference), so setting them only around the inferring read() call
+    # below is sufficient — but neither has a per-reader option form, so
     # save/restore rather than leak session mutation out of a query
     # builder.  The timezone, by contrast, is consumed at EXECUTION time
     # by timestamp expressions; restoring it here would re-expose
@@ -49,21 +86,35 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # recipe assumes UTC) rather than toggled per read.
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    _READ_CONFS = {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k, None) for k in _READ_CONFS}
-    for k, v in _READ_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    slot = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+    )
+    # stat before the read: a rewrite in between is recorded under the
+    # old key, so the next call misses and infers again
+    files = _file_key(path)
+    known = _SCHEMAS.get(slot)
+    if files is not None and known is not None and known[0] == files:
+        # the schema Spark inferred for these very files: no job
+        df = spark.read.schema(known[1]).parquet(path)
+    else:
+        _READ_CONFS = {
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        }
+        prev = {k: spark.conf.get(k, None) for k in _READ_CONFS}
+        for k, v in _READ_CONFS.items():
+            spark.conf.set(k, v)
+        try:
+            df = spark.read.parquet(path)
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        if files is not None:
+            _SCHEMAS[slot] = (files, df.schema)
     if name == "events":
         dtype = dict(df.dtypes).get("ts")
         if dtype == "bigint":  # legacy TIMESTAMP(NANOS) fixtures

@@ -130,32 +130,43 @@ def doc_postings(docs: DataFrame) -> DataFrame:
 _INDEX_META_FILE = "_bm25_meta.json"
 
 
-def _check_df_cap(
-    spark: SparkSession, store_path: str, df_cap: int | None
+def _read_index_meta(spark: SparkSession, store_path: str) -> dict | None:
+    import json
+
+    from kafkastreamsproject_spark.operators.fs import hadoop_read_text
+
+    text = hadoop_read_text(spark, f"{store_path}/{_INDEX_META_FILE}")
+    return json.loads(text) if text else None
+
+
+def _check_index_meta(
+    spark: SparkSession, store_path: str, df_cap: int | None, positional: bool
 ) -> None:
     """Sidecar guard (the distinctsketch lg_k discipline): the df cap
     is a STORE property — an uncapped fold against a capped store (or
     a different cap) would silently break the first-cap-writers-win
     invariant that makes the capped index deterministic, so the first
-    fold stamps the cap and every later fold must match it."""
+    fold stamps the cap and every later fold must match it.  The first
+    positional fold also stamps ``positional: true``, which
+    :func:`upsert_docs_in_index` reads: a forget may empty the
+    positions store, and its files no longer tell."""
     import json
 
-    from kafkastreamsproject_spark.operators.fs import (
-        hadoop_read_text,
-        hadoop_write_text,
-    )
+    from kafkastreamsproject_spark.operators.fs import hadoop_write_text
 
-    meta_path = f"{store_path}/{_INDEX_META_FILE}"
-    text = hadoop_read_text(spark, meta_path)
-    if not text:
-        hadoop_write_text(spark, meta_path, json.dumps({"df_cap": df_cap}))
-        return
-    stored = json.loads(text)["df_cap"]
-    if stored != df_cap:
+    meta = _read_index_meta(spark, store_path)
+    if meta is not None and meta["df_cap"] != df_cap:
         raise ValueError(
             f"bm25 index at {store_path} was created with df_cap="
-            f"{stored}; caller supplied df_cap={df_cap} — all folds "
-            "against one index must use the cap it was created with"
+            f"{meta['df_cap']}; caller supplied df_cap={df_cap} — all "
+            "folds against one index must use the cap it was created with"
+        )
+    want = dict(meta or {"df_cap": df_cap})
+    if positional:
+        want["positional"] = True
+    if want != meta:
+        hadoop_write_text(
+            spark, f"{store_path}/{_INDEX_META_FILE}", json.dumps(want)
         )
 
 
@@ -450,7 +461,7 @@ def index_ingest_batch(
     fold must pass the value the index was created with.  See the
     module docstring for the idempotency contract and write order."""
     spark = batch.sparkSession
-    _check_df_cap(spark, store_path, df_cap)
+    _check_index_meta(spark, store_path, df_cap, positional)
 
     with shuffle_scoped_to_buckets(spark, n_buckets):
         toks = TX.tokens(F.col("text"))
@@ -895,9 +906,10 @@ def upsert_docs_in_index(
     page whose text changed).  This op updates instead
     (``keyedstore.upsert``): the arriving doc_ids leave via
     :func:`forget_docs_in_index`, then the batch folds as fresh —
-    positionally when the index has a positional store — and the
-    index scores EXACTLY like one built from the updated corpus (the
-    ``bm25_reindex_upsert`` oracle).  Cost ∝ the arriving docs'
+    positionally when the sidecar stamps the index ``positional`` (a
+    store stamped before the flag: when its positions store holds
+    files) — and the index scores EXACTLY like one built from the
+    updated corpus (the ``bm25_reindex_upsert`` oracle).  Cost ∝ the arriving docs'
     terms' buckets (the forget bound) + the normal fold.  With
     ``df_cap`` set, the fold re-enters the cap gate at the POST-forget
     df — a term the old version had capped out may admit the recrawl —
@@ -906,7 +918,10 @@ def upsert_docs_in_index(
     RAISES when an arriving doc_id has a PENDING tombstone (run
     :func:`apply_tombstones` first).  Returns the forget counts plus
     the fold counts."""
-    positional = ks.takes_part(spark, _POSITIONS, store_path, n_buckets)
+    meta = _read_index_meta(spark, store_path) or {}
+    positional = meta.get("positional") or ks.takes_part(
+        spark, _POSITIONS, store_path, n_buckets
+    )
     return ks.upsert(
         spark, BM25, docs, store_path,
         lambda ids: forget_docs_in_index(spark, ids, store_path, n_buckets),

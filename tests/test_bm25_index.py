@@ -789,6 +789,45 @@ def test_upsert_raises_on_pending_tombstones(spark, tmp_path):
     )
 
 
+def test_upsert_replayed_after_its_forget_emptied_positions_stays_positional(
+    spark, tmp_path, monkeypatch
+):
+    """An upsert of every doc of a positional index forgets all their
+    positions, leaving the positions store without files.  A crash
+    before the fold, then a replay, must still fold positionally: the
+    flag comes from the index's sidecar, not from the store's files."""
+    from kafkastreamsproject_spark.streaming import bm25index
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
+
+    store = str(tmp_path / "upsertcrash")
+    index_ingest_batch(
+        _docs(spark, [(1, "red fox runs"), (2, "blue fox sleeps")]),
+        store, positional=True,
+    )
+    changed = _docs(spark, [(1, "red fox naps"), (2, "blue fox sleeps")])
+    fold = bm25index.index_ingest_batch
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(bm25index, "index_ingest_batch", fold)
+        raise RuntimeError("crash before the fold")
+
+    monkeypatch.setattr(bm25index, "index_ingest_batch", crash_once)
+    with pytest.raises(RuntimeError, match="crash before the fold"):
+        bm25index.upsert_docs_in_index(spark, changed, store)
+    assert not ks.takes_part(
+        spark, bm25index._POSITIONS, store, bm25index.N_BUCKETS
+    )
+
+    bm25index.upsert_docs_in_index(spark, changed, store)
+    got = {
+        r.doc_id: r.n_occurrences
+        for r in bm25index.phrase_query_index(
+            spark, store, ("red", "fox")
+        ).collect()
+    }
+    assert got == {1: 1}
+
+
 def test_corpus_stats_sidecar_tracks_ledger_without_scanning_it(
     spark, tmp_path, monkeypatch
 ):

@@ -122,6 +122,39 @@ def test_building_queries_leaves_session_conf_unchanged(spark, sf_dir):
         assert after == before, f"{name} mutated session conf: {after} != {before}"
 
 
+def test_rebuilt_bench_queries_run_no_job(spark, sf_dir):
+    """A query built a second time plans its parquet reads from the
+    schemas inferred on the first build (sources/testdata.py), so
+    rebuilding the 14 benchmark queries runs no Spark job.  Four other
+    registry queries (ann_lsh_buckets, ann_lsh_neardup, dedup_clusters,
+    streaming_neardup_ingest) run jobs at build by design."""
+    import time
+    import uuid
+
+    from bench import BENCH_QUERIES
+
+    sc = spark.sparkContext
+    for name in BENCH_QUERIES:
+        _SPECS[name].spark(spark, sf_dir)
+    rebuild, fence = (f"{k}-{uuid.uuid4().hex}" for k in ("rebuild", "fence"))
+    sc.setJobGroup(rebuild, "second build")
+    try:
+        for name in BENCH_QUERIES:
+            _SPECS[name].spark(spark, sf_dir)
+        # the status store is fed asynchronously and in order: once it
+        # holds a job started after the builds, it holds theirs too
+        sc.setJobGroup(fence, "fence")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(fence) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(fence)
+    assert tracker.getJobIdsForGroup(rebuild) == []
+
+
 def test_plans_md_matches_registry():
     """PLANS.md is a committed plan inventory; if the registry gains or
     loses a query without a scripts/explain_audit.py regeneration the

@@ -1,20 +1,12 @@
-"""Tests: SCD2 merge emulation, streaming dedup, partition pruning."""
+"""Tests: SCD2 merge emulation, streaming dedup."""
 
 from __future__ import annotations
 
-import contextlib
 import datetime as dt
-import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from kafkastreamsproject_spark.operators.scd2 import scd2_apply_changes
-from kafkastreamsproject_spark.sources.partitioned import (
-    materialize_events_by_day,
-    read_partitioned_events,
-)
-from kafkastreamsproject_spark.sources.testdata import load_table
 
 
 def test_scd2_apply_changes(spark):
@@ -79,23 +71,3 @@ def test_streaming_dedup_drops_replayed_rows(spark, tmp_path):
     q.stop()
     got = spark.sql("SELECT id FROM dedup_out").collect()
     assert sorted(r.id for r in got) == [1, 2]
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "events_by_day")
-    materialize_events_by_day(load_table(spark, "events", sf_dir), path)
-
-    df = read_partitioned_events(spark, path).filter(
-        F.col("event_day") == "2024-01-05"
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert "event_day" in plan.split("PartitionFilters")[1][:200]
-    # pruning actually works: only that day's rows are read
-    day_count = df.count()
-    assert day_count > 0
-    total = read_partitioned_events(spark, path).count()
-    assert day_count < total

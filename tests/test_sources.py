@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from kafkastreamsproject_spark.sources.csv import read_stations_csv, read_trips_csv
+from kafkastreamsproject_spark.sources.testdata import load_table
 
 
 @pytest.fixture()
@@ -53,6 +54,39 @@ def test_failfast_on_malformed(spark, tmp_path):
     )
     with pytest.raises(Exception):
         read_trips_csv(spark, str(p)).collect()
+
+
+# ---------------------------------------------------------------------------
+# parquet testdata loader (sources/testdata.py): schema once per process
+# ---------------------------------------------------------------------------
+
+
+def test_load_table_reads_an_unchanged_table_alike_twice(spark, sf_dir):
+    """The second read reuses the inferred schema; the events vintage
+    handling still yields a zoned ``ts``."""
+    first = load_table(spark, "events", sf_dir)
+    second = load_table(spark, "events", sf_dir)
+    assert second.schema == first.schema
+    assert dict(second.dtypes)["ts"] == "timestamp"
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_load_table_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """A table rewritten at the same path with an extra column is read
+    with that column on the next call, never with the old schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"k": [1, 2], "name": ["a", "b"]}), path)
+    assert load_table(spark, "region", str(tmp_path)).columns == ["k", "name"]
+
+    pq.write_table(
+        pa.table({"k": [1, 2], "name": ["a", "b"], "extra": [0.5, 1.5]}), path
+    )
+    df = load_table(spark, "region", str(tmp_path))
+    assert df.columns == ["k", "name", "extra"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a", 0.5), (2, "b", 1.5)]
 
 
 # ---------------------------------------------------------------------------
