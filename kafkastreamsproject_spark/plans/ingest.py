@@ -28,6 +28,7 @@ from kafkastreamsproject_spark.plans.dedup import (
 )
 from kafkastreamsproject_spark.plans.registry import register
 from kafkastreamsproject_spark.sources.testdata import fan_out, load_table
+from kafkastreamsproject_spark.streaming import keyedstore as ks
 from kafkastreamsproject_spark.streaming.neardup import (
     dedup_shard_against_store,
     ingest_batch,
@@ -393,10 +394,8 @@ def streaming_novelty_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint their stats, so the returned DataFrame has no
     lineage into the deleted files (the streaming_neardup_ingest
     harness discipline)."""
-    import shutil
-    import tempfile
-
     from kafkastreamsproject_spark.streaming.novelty import (
+        TRIGRAMS,
         novelty_ingest_batch,
     )
 
@@ -410,7 +409,7 @@ def streaming_novelty_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         s1 = novelty_ingest_batch(even, store)
         s2 = novelty_ingest_batch(odd, store)
     finally:
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, TRIGRAMS, store)
     return s1.select(
         "doc_id", F.lit(1).alias("batch"), "n_trigrams", "n_novel", "novelty"
     ).unionByName(
@@ -497,11 +496,9 @@ def streaming_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint their stats, so the returned DataFrame has no
     lineage into the deleted files (the streaming_neardup_ingest
     harness discipline)."""
-    import shutil
-    import tempfile
-
     from kafkastreamsproject_spark.streaming.linededup import (
         LINE_W,
+        LINES,
         line_dedup_ingest_batch,
     )
 
@@ -527,7 +524,7 @@ def streaming_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         s1 = line_dedup_ingest_batch(docs, store)
         s2 = line_dedup_ingest_batch(twins, store)
     finally:
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, LINES, store)
     cols = ["n_lines", "n_kept", "kept_ords", "keep_frac"]
     return s1.select("doc_id", F.lit(1).alias("batch"), *cols).unionByName(
         s2.select("doc_id", F.lit(2).alias("batch"), *cols)
@@ -949,7 +946,7 @@ def line_store_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten REPLAY through the line-dedup store: fold
     the corpus (epoch 1), erase every line hash carried by the
     to-be-forgotten documents (doc_id % 4 == 0) via the bucket-local
-    deletion (sources/bucketed.py:forget_keys_in_store — only the
+    deletion (streaming/keyedstore.py:forget_keys — only the
     buckets the victim hashes route to are rewritten; file-identity
     of the rest is pytest-asserted), then fold the SAME corpus again
     (epoch 2).  The oracle states the erasure semantics end-to-end:
@@ -964,12 +961,8 @@ def line_store_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded driver state: ≤ n_buckets ids via one collect_list row),
     cost ∝ affected buckets — at 100 TB a localized delete set
     touches a sliver of the store."""
-    from kafkastreamsproject_spark.sources.bucketed import (
-        forget_keys_in_store,
-        store_table_name,
-    )
     from kafkastreamsproject_spark.streaming.linededup import (
-        _STORE_SCHEMA,
+        LINES,
         N_BUCKETS,
         line_dedup_ingest_batch,
         lines_expr,
@@ -979,7 +972,6 @@ def line_store_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "documents", sf_dir).select("doc_id", "text")
     )
     store = tempfile.mkdtemp(prefix="line_forget_store_")
-    path = f"{store}/lines"
     try:
         s1 = line_dedup_ingest_batch(docs, store)
         toks = _TX.tokens(F.col("text"))
@@ -989,15 +981,7 @@ def line_store_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.md5("line").alias("lh"))
             .distinct()
         )
-        forget_keys_in_store(
-            spark,
-            victims,
-            path,
-            store_table_name("line_store", path),
-            _STORE_SCHEMA,
-            ["lh"],
-            N_BUCKETS,
-        )
+        ks.forget_keys(spark, LINES, victims, store, N_BUCKETS)
         s2 = line_dedup_ingest_batch(docs, store)
         cols = ["doc_id", "n_lines", "n_kept", "kept_ords", "keep_frac"]
         out = (
@@ -1007,7 +991,7 @@ def line_store_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
     finally:
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, LINES, store)
 
 
 _MERGE_INS_SHIFT = 100_000_000  # insert keys live far above real custkeys
@@ -1241,8 +1225,8 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotency, duplicate-doc drops, compaction, and the probe plan
     are pytest-pinned (tests/test_bm25_index.py)."""
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         query_index,
     )
@@ -1251,10 +1235,6 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="bm25_index_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), store)
@@ -1263,9 +1243,7 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 #: append-time df-cap settings (r12 verdict #2).  At the test SF the
@@ -1378,8 +1356,8 @@ def streaming_bm25_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     key).  The recall price of the knob is the bm25_dfcap_curve
     staircase."""
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         query_index,
     )
@@ -1388,10 +1366,6 @@ def streaming_bm25_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="bm25_dfcap_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         for parity in (0, 1):
             index_ingest_batch(
@@ -1403,9 +1377,7 @@ def streaming_bm25_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 def _bm25_dfcap_curve_oracle() -> str:
@@ -1484,8 +1456,8 @@ def bm25_dfcap_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     256 binds mildly, 64 binds hard — pick the cap where the
     staircase flattens."""
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         query_index,
     )
@@ -1494,15 +1466,11 @@ def bm25_dfcap_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, "documents", sf_dir)).select(
         "doc_id", "text"
     )
-    stores, tables = [], []
+    stores = []
 
     def _build(cap):
         store = tempfile.mkdtemp(prefix=f"bm25_curve_{cap}_")
         stores.append(store)
-        tables.extend(
-            store_table_name(p, f"{store}/{d}")
-            for p, d in (("bm25_postings", "postings"), ("bm25_seen", "seen"))
-        )
         for parity in (0, 1):
             index_ingest_batch(
                 docs.filter(F.col("doc_id") % 2 == parity), store, df_cap=cap
@@ -1571,10 +1539,8 @@ def bm25_dfcap_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
         for store in stores:
-            shutil.rmtree(store, ignore_errors=True)
+            ks.drop(spark, BM25, store)
 
 
 _PHRASE = ("table", "hash")  # 46 docs / 48 occurrences at sf0.01
@@ -1619,8 +1585,8 @@ def streaming_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     freshness, zero-Exchange seen probe, pure-append posting stores);
     phrase edge cases (overlaps, cross-epoch docs, replay) are
     pytest-pinned in tests/test_bm25_index.py."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         phrase_query_index,
     )
@@ -1629,11 +1595,6 @@ def streaming_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="phrase_index_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_positions", f"{store}/positions"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         index_ingest_batch(
             docs.filter(F.col("doc_id") % 2 == 0), store, positional=True
@@ -1646,9 +1607,7 @@ def streaming_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 def _ann_index_oracle() -> str:
@@ -1687,8 +1646,8 @@ def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships (query, vec, long) triples after pruning.  Store behavior
     (replay idempotency, duplicate-vector drops, compaction, frozen
     codebooks) is pytest-pinned in tests/test_ann_index.py."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_query_index,
         create_ann_store,
@@ -1699,10 +1658,6 @@ def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     store = tempfile.mkdtemp(prefix="ann_index_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         # EXPLICIT test-SF geometry: this query's point is equality
         # with ivf_pq_search's reused oracle, which is pinned to the
@@ -1716,9 +1671,7 @@ def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, store, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 #: NON-DEFAULT geometry for the parameterization check (r12 verdict
@@ -1889,8 +1842,8 @@ def streaming_ann_index_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     later fold/query reads the sidecar); the fold smoke
     (scripts/r13_ann_geometry_smoke.py) measures the query-wall
     consequence at 10× growth."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_query_index,
         create_ann_store,
@@ -1900,10 +1853,6 @@ def streaming_ann_index_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     store = tempfile.mkdtemp(prefix="ann_index_geo_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         create_ann_store(spark, store, emb, **_ANN_GEO)
         for residue in (0, 1, 2):
@@ -1919,9 +1868,7 @@ def streaming_ann_index_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
             geometry=_ANN_GEO,
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 #: rebuild-path victims: vec_id 2 is a default-geometry codebook
@@ -2057,8 +2004,8 @@ def ann_forget_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     full codebook erasure costs); it runs as a versioned maintenance
     op under a new store directory while the in-place path serves the
     common non-training-member erasures bucket-locally."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_query_index,
         rebuild_ann_store,
     )
@@ -2070,10 +2017,6 @@ def ann_forget_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(v,) for v in _REBUILD_VICTIMS], "vec_id long"
     )
     store = tempfile.mkdtemp(prefix="ann_rebuild_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         rebuild_ann_store(
             spark, emb, victims, store,
@@ -2083,9 +2026,7 @@ def ann_forget_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, store, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 _FORGET_MOD = 37  # victims: doc_id % 37 == 3 (~2.7% of the corpus)
@@ -2129,8 +2070,8 @@ def index_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-asserted in tests/test_bm25_index.py); the victims' posting
     keys come from one column-pruned 16 B/row store scan."""
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         forget_docs_in_index,
         index_ingest_batch,
         query_index,
@@ -2140,10 +2081,6 @@ def index_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="bm25_forget_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), store)
@@ -2155,9 +2092,7 @@ def index_forget_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 #: filtered-search predicate: corpus vectors carrying this label (the
@@ -2219,8 +2154,8 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity instead of paying full-ADC-then-discard.  A
     store-scale predicate belongs in a vec_id-bucketed store
     semi-joined on its bucket key (sources/bucketed.py)."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_query_index,
         create_ann_store,
@@ -2231,10 +2166,6 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = full.select("vec_id", "embedding")
     allowed = full.filter(F.col("label") == _FILTER_LABEL).select("vec_id")
     store = tempfile.mkdtemp(prefix="ann_filtered_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         create_ann_store(spark, store, emb, **default_geometry())
         ann_ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), store)
@@ -2248,9 +2179,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             allowed=allowed,
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 #: the nprobe sweep for the store-path recall curve; all ≤ the C ≥ 8
@@ -2459,8 +2388,8 @@ def ann_store_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the truth side is the diagnostic's cost, not the operator's."""
     from pyspark.sql import Window as W
 
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         _int_dist2,
         ann_ingest_batch,
         ann_query_index,
@@ -2474,10 +2403,6 @@ def ann_store_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.filter(F.col("vec_id") < 10)
     store = tempfile.mkdtemp(prefix="ann_recall_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         create_ann_store(spark, store, emb)  # bare: sized geometry
         ann_ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), store)
@@ -2555,9 +2480,7 @@ def ann_store_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out.localCheckpoint(eager=True)
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 _RERANK_R = 50
@@ -2608,8 +2531,8 @@ def ann_store_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of store size (an IVF-Flat cell-bucketed raw-vector
     sidecar would cut that to the probed cells; future work noted in
     the operator docstring)."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_rerank_index,
         create_ann_store,
@@ -2620,10 +2543,6 @@ def ann_store_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     store = tempfile.mkdtemp(prefix="ann_rerank_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         create_ann_store(spark, store, emb, **default_geometry())
         ann_ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), store)
@@ -2638,9 +2557,7 @@ def ann_store_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             r_shortlist=_RERANK_R,
         ).localCheckpoint(eager=True)
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 @register(
@@ -2670,8 +2587,8 @@ def ann_rerank_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same crash-window position as codes: before the seen commit);
     GDPR erasure reaches it (victims' quantized embeddings leave with
     their codes — pytest-pinned)."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_rerank_index,
         create_ann_store,
@@ -2682,11 +2599,6 @@ def ann_rerank_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     store = tempfile.mkdtemp(prefix="ann_sidecar_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-        store_table_name("ann_vecs", f"{store}/vecs"),
-    ]
     try:
         create_ann_store(
             spark, store, emb, **default_geometry(), store_vectors=True
@@ -2703,9 +2615,7 @@ def ann_rerank_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
             vectors_from_store=True,
         ).localCheckpoint(eager=True)
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 #: hybrid serving-stack fusion knobs: per-side candidate cut (the
@@ -2799,14 +2709,15 @@ def hybrid_search_from_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion is a 100-vs-100 outer merge."""
     from kafkastreamsproject_spark.operators.topk import top_k
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_rerank_index,
         create_ann_store,
         default_geometry,
     )
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         query_index,
     )
@@ -2819,13 +2730,6 @@ def hybrid_search_from_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bm_store = tempfile.mkdtemp(prefix="hybrid_bm25_store_")
     ann_store = tempfile.mkdtemp(prefix="hybrid_ann_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{bm_store}/postings"),
-        store_table_name("bm25_seen", f"{bm_store}/seen"),
-        store_table_name("ann_codes", f"{ann_store}/codes"),
-        store_table_name("ann_seen", f"{ann_store}/seen"),
-        store_table_name("ann_vecs", f"{ann_store}/vecs"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), bm_store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), bm_store)
@@ -2867,10 +2771,8 @@ def hybrid_search_from_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "lex_rank", "sem_rank", rrf.alias("rrf")
         ).localCheckpoint(eager=True)
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(bm_store, ignore_errors=True)
-        shutil.rmtree(ann_store, ignore_errors=True)
+        ks.drop(spark, BM25, bm_store)
+        ks.drop(spark, ANN, ann_store)
 
 
 # ---------------------------------------------------------------------------
@@ -2938,8 +2840,8 @@ def ann_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; queries pay one broadcast anti-join on the pending set
     (driver-bounded between applies); apply touches only the victims'
     cells' buckets."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_query_index,
         apply_tombstones,
@@ -2953,10 +2855,6 @@ def ann_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     victims = emb.filter(_TOMB_SQL_PRED).select("vec_id")
     store = tempfile.mkdtemp(prefix="ann_tombstone_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     q = emb.filter(F.col("vec_id") < 10)
     try:
         create_ann_store(spark, store, emb, **default_geometry())
@@ -2975,9 +2873,7 @@ def ann_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "phase", F.lit(1).cast("int")
         ).unionByName(applied.withColumn("phase", F.lit(2).cast("int")))
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 _TOMB_BM_MOD = 41  # BM25 tombstone victims: doc_id % 41 == 5 (~2.4%)
@@ -3032,8 +2928,8 @@ def bm25_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one at the 16 B/doc ledger aggregate; apply touches only the
     victims' terms' buckets."""
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         apply_tombstones,
         index_ingest_batch,
         query_index,
@@ -3044,10 +2940,6 @@ def bm25_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="bm25_tombstone_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), store)
@@ -3067,9 +2959,7 @@ def bm25_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "phase", F.lit(1).cast("int")
         ).unionByName(applied.withColumn("phase", F.lit(2).cast("int")))
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 # ---------------------------------------------------------------------------
@@ -3157,8 +3047,8 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics; recall beyond the probed cells is priced by the
     existing nprobe curve, not hidden (an unprobed cell's neighbor is
     absent from BOTH sides here)."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_range_index,
         create_ann_store,
@@ -3169,11 +3059,6 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     store = tempfile.mkdtemp(prefix="ann_range_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-        store_table_name("ann_vecs", f"{store}/vecs"),
-    ]
     try:
         create_ann_store(
             spark, store, emb, **default_geometry(), store_vectors=True
@@ -3188,9 +3073,7 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             nprobe=_RANGE_NPROBE,
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)
 
 
 # ---------------------------------------------------------------------------
@@ -3394,8 +3277,8 @@ def bm25_boolean_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay corpus-wide (the batch scorer's WHERE-clause convention),
     which the oracle verifies by recomputing scores — a wrong df
     convention would shift every float, not just membership."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         boolean_query_index,
         index_ingest_batch,
     )
@@ -3404,10 +3287,6 @@ def bm25_boolean_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="bm25_boolean_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), store)
@@ -3419,9 +3298,7 @@ def bm25_boolean_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             must_not=_BOOL_MUST_NOT,
         ).localCheckpoint(eager=True)
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 # ---------------------------------------------------------------------------
@@ -3473,9 +3350,9 @@ def ann_versioned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafkastreamsproject_spark.sources.bucketed import (
         publish_store_version,
         resolve_store_version,
-        store_table_name,
     )
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_query_index,
         create_ann_store,
@@ -3489,14 +3366,10 @@ def ann_versioned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(v,) for v in _REBUILD_VICTIMS], "vec_id long"
     )
     base = tempfile.mkdtemp(prefix="ann_versioned_base_")
-    tables = []
+    v1 = f"{base}/v0001"
+    versions = [v1]
     q = emb.filter(F.col("vec_id") < 10)
     try:
-        v1 = f"{base}/v0001"
-        tables += [
-            store_table_name("ann_codes", f"{v1}/codes"),
-            store_table_name("ann_seen", f"{v1}/seen"),
-        ]
         create_ann_store(
             spark, v1, emb, c_cells=8, k_codes=16, m_subspaces=4,
             n_buckets=8,
@@ -3510,11 +3383,7 @@ def ann_versioned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, emb, victims, base,
             c_cells=8, k_codes=16, m_subspaces=4, n_buckets=8,
         )
-        v2 = f"{base}/{out['version']}"
-        tables += [
-            store_table_name("ann_codes", f"{v2}/codes"),
-            store_table_name("ann_seen", f"{v2}/seen"),
-        ]
+        versions.append(f"{base}/{out['version']}")
         phase2 = ann_query_index(
             spark, resolve_store_version(spark, base), q, k=5, nprobe=2
         )
@@ -3522,8 +3391,8 @@ def ann_versioned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             "phase", F.lit(1).cast("int")
         ).unionByName(phase2.withColumn("phase", F.lit(2).cast("int")))
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
+        for version in versions:
+            ks.drop(spark, ANN, version)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -3592,14 +3461,15 @@ def serving_store_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     here as a count mismatch.  The physical ``data_files`` column
     (the compaction trigger's input) is exercised by pytest instead —
     file counts are layout, not semantics."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         create_ann_store,
         default_geometry,
         tombstone_vectors_in_index,
     )
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         tombstone_docs_in_index,
     )
@@ -3615,13 +3485,6 @@ def serving_store_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bm_store = tempfile.mkdtemp(prefix="stats_bm25_store_")
     ann_store = tempfile.mkdtemp(prefix="stats_ann_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{bm_store}/postings"),
-        store_table_name("bm25_seen", f"{bm_store}/seen"),
-        store_table_name("ann_codes", f"{ann_store}/codes"),
-        store_table_name("ann_seen", f"{ann_store}/seen"),
-        store_table_name("ann_vecs", f"{ann_store}/vecs"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), bm_store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), bm_store)
@@ -3646,10 +3509,8 @@ def serving_store_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(bm_store, ignore_errors=True)
-        shutil.rmtree(ann_store, ignore_errors=True)
+        ks.drop(spark, BM25, bm_store)
+        ks.drop(spark, ANN, ann_store)
 
 
 # ---------------------------------------------------------------------------
@@ -3707,8 +3568,8 @@ def bm25_reindex_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once replay (the forget re-runs as a no-op, the fold
     re-drops as seen)."""
     from kafkastreamsproject_spark.plans.text import _BM25_TERMS
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.bm25index import (
+        BM25,
         index_ingest_batch,
         query_index,
         upsert_docs_in_index,
@@ -3718,10 +3579,6 @@ def bm25_reindex_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     store = tempfile.mkdtemp(prefix="bm25_upsert_store_")
-    tables = [
-        store_table_name("bm25_postings", f"{store}/postings"),
-        store_table_name("bm25_seen", f"{store}/seen"),
-    ]
     try:
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 0), store)
         index_ingest_batch(docs.filter(F.col("doc_id") % 2 == 1), store)
@@ -3736,9 +3593,7 @@ def bm25_reindex_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, BM25, store)
 
 
 #: re-embedded vectors: vec_id % 11 == 5, clear of the codebook
@@ -3786,8 +3641,8 @@ def ann_reindex_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     and candidate membership are all verified — a vector left in its
     old cell would surface as a membership diff, a stale code as a
     distance diff."""
-    from kafkastreamsproject_spark.sources.bucketed import store_table_name
     from kafkastreamsproject_spark.streaming.annindex import (
+        ANN,
         ann_ingest_batch,
         ann_query_index,
         create_ann_store,
@@ -3806,10 +3661,6 @@ def ann_reindex_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("embedding")).alias("embedding"),
     )
     store = tempfile.mkdtemp(prefix="ann_upsert_store_")
-    tables = [
-        store_table_name("ann_codes", f"{store}/codes"),
-        store_table_name("ann_seen", f"{store}/seen"),
-    ]
     try:
         create_ann_store(spark, store, emb, **default_geometry())
         ann_ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), store)
@@ -3822,6 +3673,4 @@ def ann_reindex_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=5, nprobe=2,
         )
     finally:
-        for table in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store, ignore_errors=True)
+        ks.drop(spark, ANN, store)

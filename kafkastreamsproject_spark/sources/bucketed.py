@@ -50,22 +50,18 @@ def materialize_bucketed(
     writer.saveAsTable(table_name)
 
 
-def bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 # ---------------------------------------------------------------------------
 # Appendable bucketed hash stores (streaming-ingest state)
 #
-# The persisted-store ingest folds (streaming/linededup.py,
-# streaming/novelty.py, streaming/neardup.py) probe an ever-growing
-# hash relation every micro-batch.  A plain parquet append log makes
-# that probe re-shuffle the ENTIRE store per batch — at 100 TB the
-# line store is corpus-sized and the per-batch Exchange dominates
-# everything else.  Writing the store as a bucketed external table
-# keyed on the probe column makes the anti-join read co-located
-# buckets: only the (small) incoming batch shuffles, the store side
-# plans zero Exchange (asserted in tests/test_neardup_ingest.py).
+# The first-seen hash sets and the serving indexes
+# (streaming/keyedstore.py) probe an ever-growing hash relation every
+# micro-batch.  A plain parquet append log makes that probe re-shuffle
+# the ENTIRE store per batch — at 100 TB the line store is corpus-sized
+# and the per-batch Exchange dominates everything else.  Writing the
+# store as a bucketed external table keyed on the probe column makes
+# the anti-join read co-located buckets: only the (small) incoming
+# batch shuffles, the store side plans zero Exchange (asserted in
+# tests/test_neardup_ingest.py).
 #
 # Appends go through saveAsTable(mode="append") with a matching bucket
 # spec — each epoch adds one bucket-encoded file per task, so the scan
@@ -561,10 +557,6 @@ def forget_rows_in_store(
         "files_rewritten": len(files),
         "rows_deleted": n_old - n_kept,
     }
-
-
-#: key-level form: match on the bucket key alone
-forget_keys_in_store = forget_rows_in_store
 
 
 # ---------------------------------------------------------------------------

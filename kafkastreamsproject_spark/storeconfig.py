@@ -12,8 +12,9 @@ defaults.
 
 Species and sizing rules
 ------------------------
-- **bucketed hash append stores** (line store, novelty trigrams,
-  bm25 seen/postings/positions, ann codes/seen; sources/bucketed.py):
+- **bucketed hash append stores** (the line and trigram hash sets,
+  bm25 seen/postings/positions, ann seen/codes/vecs; one lifecycle in
+  streaming/keyedstore.py over sources/bucketed.py):
   ``n_buckets`` — bucket at least as wide as the ingest job's
   parallelism, 128–512 MB per bucket; the 8-bucket default is the
   test-SF width.  All folds against one store must use the width it

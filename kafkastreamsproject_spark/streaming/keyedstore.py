@@ -1,12 +1,25 @@
-"""One store lifecycle for the keyed serving indexes (BM25, IVF-PQ).
+"""One store lifecycle for the keyed serving indexes (BM25, IVF-PQ)
+and the first-seen hash sets (line dedup, corpus novelty).
 
 The reference keeps its state in Kafka Streams key-value stores that
 all share one lifecycle; Structured Streaming puts every state store
-behind one provider.  The two serving indexes here do the same: each
-is described by a :class:`KeyedIndex` spec, and this module holds the
-one implementation of reading, compacting, erasing, upserting,
-tombstoning and describing them, over the ``sources/bucketed.py``
-helpers.  The ingest folds and the query paths stay with each index.
+behind one provider.  The stores here do the same: a serving index is
+described by a :class:`KeyedIndex` spec, a hash set by one
+:class:`Substore`, and this module holds the one implementation of
+reading, admitting, compacting, erasing, upserting, tombstoning,
+describing and dropping them, over the ``sources/bucketed.py``
+helpers.  It is also the only module that maps a store directory to
+its catalog table (:meth:`Substore.table`).  Batch shaping, stats
+and query paths stay with each store's module.
+
+A hash set (``streaming/linededup.py``'s ``lines``,
+``streaming/novelty.py``'s ``trigrams``) is one substore bucketed on
+its hash column.  A fold (:func:`admit`) elects the batch's first row
+per hash, anti-joins those against the set (:func:`probe`, zero
+store-side Exchange), pins the caller's stats and the admitted rows
+to the pre-append snapshot, then appends: a replayed fold admits
+nothing twice.  :func:`compact` and :func:`forget_keys` maintain it,
+:func:`drop` removes it.
 
 An index lives under one root directory and is keyed by one id column
 (``doc_id`` / ``vec_id``):
@@ -66,8 +79,9 @@ from kafkastreamsproject_spark.sources import bucketed
 
 @dataclass(frozen=True)
 class Substore:
-    """One bucketed substore: its directory under the index root (also
-    its stats row name), schema, bucket columns and catalog prefix."""
+    """One bucketed substore: its directory under the store root (also
+    its stats row name), schema, bucket columns and catalog prefix.  A
+    hash set is one substore, bucketed on its hash column."""
 
     name: str
     schema: str
@@ -126,19 +140,80 @@ def _live(
     return [s for s in spec.rows if takes_part(spark, s, root, n_buckets)]
 
 
+def probe(sub: Substore, first: DataFrame, store: DataFrame) -> DataFrame:
+    """The rows of ``first`` whose hash (``sub``'s bucket column) the
+    set ``store`` has never admitted.  The store side scans its buckets
+    in place PROVIDED the session's shuffle partitions do not exceed
+    its bucket count at execution (EnsureRequirements reuses the bucket
+    partitioning only then; :func:`admit` scopes this, and a batch-side
+    repartition is no substitute — Catalyst hoists it above the
+    join)."""
+    key = sub.bucket_cols[0]
+    return first.join(store.select(key), key, "left_anti")
+
+
+def admit(
+    sub: Substore,
+    rows: DataFrame,
+    elect: Callable[[DataFrame], DataFrame],
+    stats: Callable[[DataFrame, DataFrame], DataFrame],
+    root: str,
+    n_buckets: int,
+) -> DataFrame:
+    """One first-seen fold of the hash set ``sub``: ``elect(rows)``
+    picks the batch's first row per hash (the set's columns plus
+    anything ``stats`` needs), :func:`probe` keeps those the set has
+    never admitted, and ``stats(rows, fresh)`` is the caller's result.
+    The result and the admitted rows are both pinned to the pre-append
+    snapshot (eager localCheckpoint), so neither carries lineage into
+    the files the append writes and a replay admits nothing twice.
+    Runs under ``shuffle_scoped_to_buckets``: the probe plans no
+    store-side Exchange whatever the ambient shuffle partitions."""
+    spark = rows.sparkSession
+    with bucketed.shuffle_scoped_to_buckets(spark, n_buckets):
+        rows.persist()
+        store = read(spark, sub, root, n_buckets)
+        fresh = probe(sub, elect(rows), store)
+        out = stats(rows, fresh).localCheckpoint(eager=True)
+        admitted = fresh.select(*store.columns).localCheckpoint(eager=True)
+        rows.unpersist()
+        append(spark, sub, admitted, root, n_buckets)
+    return out
+
+
 def compact(
-    spark: SparkSession, spec: KeyedIndex, root: str, n_buckets: int
+    spark: SparkSession, spec: KeyedIndex | Substore, root: str, n_buckets: int
 ) -> int:
-    """Compact the ledger and every live row substore to ~1 file per
-    bucket; returns the required row substore's data-file count."""
-    files = {
-        sub.name: bucketed.compact_bucketed_store(
-            spark, sub.path(root), sub.table(root), sub.schema,
-            list(sub.bucket_cols), n_buckets,
+    """Compact a hash set, or an index's ledger and every live row
+    substore, to ~1 file per bucket; returns the data-file count of
+    the set, or of the index's required row substore."""
+    if isinstance(spec, Substore):
+        return bucketed.compact_bucketed_store(
+            spark, spec.path(root), spec.table(root), spec.schema,
+            list(spec.bucket_cols), n_buckets,
         )
+    files = {
+        sub.name: compact(spark, sub, root, n_buckets)
         for sub in [spec.seen, *_live(spark, spec, root, n_buckets)]
     }
     return files[spec.rows[0].name]
+
+
+def forget_keys(
+    spark: SparkSession,
+    sub: Substore,
+    keys: DataFrame,
+    root: str,
+    n_buckets: int,
+) -> dict:
+    """Delete every row of ``sub`` whose values on ``keys``' columns
+    (the bucket column among them) appear in ``keys``, rewriting only
+    the buckets those keys hash to.  Returns affected_buckets,
+    files_rewritten and rows_deleted."""
+    return bucketed.forget_rows_in_store(
+        spark, keys, sub.path(root), sub.table(root), sub.schema,
+        list(sub.bucket_cols), n_buckets, match_cols=keys.columns,
+    )
 
 
 def forget(
@@ -166,17 +241,10 @@ def forget(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        out[sub.name] = bucketed.forget_rows_in_store(
-            spark, keys, sub.path(root), sub.table(root), sub.schema,
-            list(sub.bucket_cols), n_buckets, match_cols=match,
-        )
+        out[sub.name] = forget_keys(spark, sub, keys, root, n_buckets)
     if before_ledger is not None:
         before_ledger(victims)
-    seen = spec.seen
-    out["seen"] = bucketed.forget_rows_in_store(
-        spark, victims, seen.path(root), seen.table(root), seen.schema,
-        list(seen.bucket_cols), n_buckets,
-    )
+    out["seen"] = forget_keys(spark, spec.seen, victims, root, n_buckets)
     return out
 
 
@@ -299,3 +367,14 @@ def store_stats(
     return local_rows(
         spark, "substore string, rows long, data_files int", out
     )
+
+
+def drop(spark: SparkSession, spec: KeyedIndex | Substore, root: str) -> None:
+    """Remove the store at ``root``: drop the catalog entry of every
+    substore of ``spec`` (a hash set is its own one substore; optional
+    substores included, present or not), then delete ``root``."""
+    subs = [spec] if isinstance(spec, Substore) else [spec.seen, *spec.rows]
+    for sub in subs:
+        spark.sql(f"DROP TABLE IF EXISTS {sub.table(root)}")
+    fs, path = _fs_and_path(spark, root)
+    fs.delete(path, True)

@@ -16,32 +16,27 @@ its FIRST keeper in arrival order — across batches by batch order,
 within a batch by minimum (doc_id, ordinal).
 
 Scale shape: lines are sliced and hashed in-row (text never shuffles);
-the store carries one 32-char md5 per distinct corpus line, written as
-a BUCKETED external table keyed on the hash (sources/bucketed.py) so
-the per-batch anti-join probe reads co-located buckets and plans ZERO
-store-side Exchange — at 100 TB the line store is corpus-sized and an
-unbucketed store would re-shuffle its entire history every micro-batch.
-Only the (small) batch side shuffles; per-doc rollups shuffle
-(doc_id, small ints).  compact_store bounds the per-epoch small files.
+the store is the ``lines`` hash set of ``streaming/keyedstore.py``, one
+32-char md5 per distinct corpus line, bucketed on the hash so the
+per-batch anti-join probe plans ZERO store-side Exchange — at 100 TB
+the line store is corpus-sized and an unbucketed store would re-shuffle
+its entire history every micro-batch.  Only the (small) batch side
+shuffles; per-doc rollups shuffle (doc_id, small ints).
+``keyedstore.compact`` bounds the per-epoch small files.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafkastreamsproject_spark.storeconfig import DEFAULTS
 from kafkastreamsproject_spark.functions import text as TX
-from kafkastreamsproject_spark.sources.bucketed import (
-    append_bucketed_store,
-    compact_bucketed_store,
-    read_bucketed_store,
-    shuffle_scoped_to_buckets,
-    store_table_name,
-)
+from kafkastreamsproject_spark.streaming import keyedstore as ks
 
 LINE_W = 12  # tokens per synthetic line — must match the batch operator
-_STORE_SCHEMA = "lh string"
+#: the first-seen line-hash set, under ``<store>/lines``
+LINES = ks.Substore("lines", "lh string", ("lh",), "line_store")
 #: default store width, sized for the test SF.  Every entry point takes
 #: ``n_buckets``; production sizing rule (sources/bucketed.py:61-74):
 #: at least the ingest parallelism, targeting 128-512 MB per bucket.
@@ -64,42 +59,6 @@ def lines_expr(toks: Column, w: int = LINE_W) -> Column:
     )
 
 
-def _read_store(
-    spark: SparkSession, path: str, n_buckets: int = N_BUCKETS
-) -> DataFrame:
-    """The store as a bucketed-table scan — probes against it plan no
-    store-side Exchange (asserted in tests/test_neardup_ingest.py at
-    the default AND a non-default width)."""
-    return read_bucketed_store(
-        spark, path, store_table_name("line_store", path), _STORE_SCHEMA,
-        ["lh"], n_buckets,
-    )
-
-
-def fresh_against_store(batch_first: DataFrame, store: DataFrame) -> DataFrame:
-    """The probe: batch-elected first-keepers whose line hash the store
-    has never admitted.  Store side scans its buckets in place —
-    PROVIDED the session's shuffle partitions do not exceed N_BUCKETS
-    at execution time (EnsureRequirements only reuses the bucket
-    partitioning then; the fold enforces this with
-    shuffle_scoped_to_buckets, and an explicit batch-side repartition
-    is NOT a substitute — Catalyst hoists it above the join)."""
-    return batch_first.join(store.select("lh"), "lh", "left_anti")
-
-
-def compact_store(
-    spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
-) -> int:
-    """Bound the store's per-epoch small files (~1 file per bucket
-    after).  Single-writer: run between epochs.  Returns the data-file
-    count after compaction."""
-    path = f"{store_path}/lines"
-    return compact_bucketed_store(
-        spark, path, store_table_name("line_store", path), _STORE_SCHEMA,
-        ["lh"], n_buckets,
-    )
-
-
 def line_dedup_ingest_batch(
     batch: DataFrame, store_path: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
@@ -113,25 +72,21 @@ def line_dedup_ingest_batch(
     batch.  Side effect: appends the batch's fresh line hashes under
     ``<store>/lines`` (idempotent under epoch replay: already-admitted
     hashes anti-join away)."""
-    spark = batch.sparkSession
-    path = f"{store_path}/lines"
+    toks = TX.tokens(F.col("text"))
+    base = batch.filter(F.size(toks) >= 1).select(
+        "doc_id", lines_expr(toks).alias("lines")
+    )
+    ex = base.select(
+        "doc_id",
+        F.posexplode(F.transform("lines", F.md5)).alias("ord", "lh"),
+    )
 
-    with shuffle_scoped_to_buckets(spark, n_buckets):
-        toks = TX.tokens(F.col("text"))
-        base = batch.filter(F.size(toks) >= 1).select(
-            "doc_id", lines_expr(toks).alias("lines")
-        )
-        ex = base.select(
-            "doc_id",
-            F.posexplode(F.transform("lines", F.md5)).alias("ord", "lh"),
-        )
-        ex.persist()
-        store = _read_store(spark, path, n_buckets)
-
-        batch_first = ex.groupBy("lh").agg(
+    def elect(ex: DataFrame) -> DataFrame:
+        return ex.groupBy("lh").agg(
             F.min(F.struct("doc_id", "ord")).alias("w")
         )
-        fresh = fresh_against_store(batch_first, store)
+
+    def stats(ex: DataFrame, fresh: DataFrame) -> DataFrame:
         kept = (
             ex.join(fresh, "lh")
             .filter(
@@ -141,7 +96,7 @@ def line_dedup_ingest_batch(
             .groupBy("doc_id")
             .agg(F.sort_array(F.collect_list("ord")).alias("keep"))
         )
-        stats = (
+        return (
             base.select("doc_id", F.size("lines").alias("n_lines"))
             .join(kept, "doc_id", "left")
             .withColumn(
@@ -159,14 +114,5 @@ def line_dedup_ingest_batch(
                 ),
             )
         )
-        # pin stats AND the append set to the pre-append store snapshot:
-        # neither carries lineage into files this fold writes
-        stats = stats.localCheckpoint(eager=True)
-        admitted = fresh.select("lh").localCheckpoint(eager=True)
-        ex.unpersist()
 
-        append_bucketed_store(
-            spark, admitted, path, store_table_name("line_store", path),
-            ["lh"], n_buckets,
-        )
-    return stats
+    return ks.admit(LINES, ex, elect, stats, store_path, n_buckets)

@@ -20,32 +20,29 @@ a replay equal the original's because the store snapshot they probe is
 the same (verdicts-before-append discipline).
 
 Scale shape: trigrams md5-hash inside the row before the explode (text
-never shuffles), the store carries (h, first_doc) longs — 16 B per
-distinct corpus trigram — written as a BUCKETED external table keyed
-on h (sources/bucketed.py) so the per-batch anti-join probe reads
-co-located buckets and plans ZERO store-side Exchange; an unbucketed
-store would re-shuffle its entire (ever-growing) history every
-micro-batch.  Only the batch side shuffles; per-doc rollups shuffle
-(doc_id, long) pairs.  compact_store bounds per-epoch small files.
+never shuffles); the store is the ``trigrams`` hash set of
+``streaming/keyedstore.py``, (h, first_doc) longs — 16 B per distinct
+corpus trigram — bucketed on h so the per-batch anti-join probe plans
+ZERO store-side Exchange; an unbucketed store would re-shuffle its
+entire (ever-growing) history every micro-batch.  Only the batch side
+shuffles; per-doc rollups shuffle (doc_id, long) pairs.
+``keyedstore.compact`` bounds per-epoch small files.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafkastreamsproject_spark.storeconfig import DEFAULTS
 from kafkastreamsproject_spark.functions import hashing as H
 from kafkastreamsproject_spark.functions import text as TX
-from kafkastreamsproject_spark.sources.bucketed import (
-    append_bucketed_store,
-    compact_bucketed_store,
-    read_bucketed_store,
-    shuffle_scoped_to_buckets,
-    store_table_name,
-)
+from kafkastreamsproject_spark.streaming import keyedstore as ks
 
-_NOVELTY_SCHEMA = "h long, first_doc long"
+#: the first-seen trigram set, under ``<store>/trigrams``
+TRIGRAMS = ks.Substore(
+    "trigrams", "h long, first_doc long", ("h",), "novelty_store"
+)
 _TRI_W = 3
 #: default store width, sized for the test SF.  Every entry point takes
 #: ``n_buckets``; production sizing rule (sources/bucketed.py:61-74):
@@ -70,40 +67,6 @@ def doc_trigram_hashes(docs: DataFrame) -> DataFrame:
     )
 
 
-def _read_store(
-    spark: SparkSession, path: str, n_buckets: int = N_BUCKETS
-) -> DataFrame:
-    """The store as a bucketed-table scan — probes against it plan no
-    store-side Exchange (asserted in tests/test_neardup_ingest.py at
-    the default AND a non-default width)."""
-    return read_bucketed_store(
-        spark, path, store_table_name("novelty_store", path),
-        _NOVELTY_SCHEMA, ["h"], n_buckets,
-    )
-
-
-def fresh_against_store(batch_first: DataFrame, store: DataFrame) -> DataFrame:
-    """The probe: batch-elected first-carriers whose trigram hash the
-    store has never admitted.  Store side scans its buckets in place —
-    provided shuffle partitions <= N_BUCKETS at execution time (the
-    fold enforces this with shuffle_scoped_to_buckets; see
-    streaming/linededup.py:fresh_against_store)."""
-    return batch_first.join(store.select("h"), "h", "left_anti")
-
-
-def compact_store(
-    spark: SparkSession, store_path: str, n_buckets: int = N_BUCKETS
-) -> int:
-    """Bound the store's per-epoch small files (~1 file per bucket
-    after).  Single-writer: run between epochs.  Returns the data-file
-    count after compaction."""
-    path = f"{store_path}/trigrams"
-    return compact_bucketed_store(
-        spark, path, store_table_name("novelty_store", path),
-        _NOVELTY_SCHEMA, ["h"], n_buckets,
-    )
-
-
 def novelty_ingest_batch(
     batch: DataFrame, store_path: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
@@ -116,20 +79,12 @@ def novelty_ingest_batch(
     store AND this doc is its minimum-doc_id carrier within the batch.
     Side effect: appends the batch's novel (h, first_doc) rows under
     ``<store>/trigrams`` (idempotent under epoch replay)."""
-    spark = batch.sparkSession
-    tri_path = f"{store_path}/trigrams"
 
-    with shuffle_scoped_to_buckets(spark, n_buckets):
-        tri = doc_trigram_hashes(batch)
-        tri.persist()
-        store = _read_store(spark, tri_path, n_buckets)
+    def elect(tri: DataFrame) -> DataFrame:
+        return tri.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
 
-        batch_first = tri.groupBy("h").agg(
-            F.min("doc_id").alias("first_doc")
-        )
-        fresh = fresh_against_store(batch_first, store)
-
-        stats = (
+    def stats(tri: DataFrame, fresh: DataFrame) -> DataFrame:
+        return (
             tri.join(
                 fresh.select("h", F.col("first_doc").alias("nf")), "h", "left"
             )
@@ -152,15 +107,8 @@ def novelty_ingest_batch(
                 ).alias("novelty"),
             )
         )
-        # pin stats AND the append set to the pre-append store snapshot:
-        # neither carries lineage into files this fold writes
-        stats = stats.localCheckpoint(eager=True)
-        admitted = fresh.localCheckpoint(eager=True)
-        tri.unpersist()
 
-        append_bucketed_store(
-            spark, admitted, tri_path,
-            store_table_name("novelty_store", tri_path),
-            ["h"], n_buckets,
-        )
-    return stats
+    return ks.admit(
+        TRIGRAMS, doc_trigram_hashes(batch), elect, stats, store_path,
+        n_buckets,
+    )

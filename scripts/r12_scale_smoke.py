@@ -104,9 +104,9 @@ def _epochs(docs, n_epochs: int):
 
 
 def smoke_line_store(spark, docs, root: str, label: str, width: int = WIDTH, epochs: int = EPOCHS) -> dict:
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
-        _read_store,
-        fresh_against_store,
+        LINES,
         line_dedup_ingest_batch,
         lines_expr,
     )
@@ -139,8 +139,8 @@ def smoke_line_store(spark, docs, root: str, label: str, width: int = WIDTH, epo
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = fresh_against_store(
-            batch_first, _read_store(spark, f"{store}/lines", width)
+        probe = ks.probe(
+            LINES, batch_first, ks.read(spark, LINES, store, width)
         )
         with shuffle_scoped_to_buckets(spark, width):
             plan = _plan_of(probe)
@@ -158,10 +158,10 @@ def smoke_line_store(spark, docs, root: str, label: str, width: int = WIDTH, epo
 
 
 def smoke_novelty_store(spark, docs, root: str, label: str, width: int = WIDTH, epochs: int = EPOCHS) -> dict:
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.novelty import (
-        _read_store,
+        TRIGRAMS,
         doc_trigram_hashes,
-        fresh_against_store,
         novelty_ingest_batch,
     )
 
@@ -183,8 +183,8 @@ def smoke_novelty_store(spark, docs, root: str, label: str, width: int = WIDTH, 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = fresh_against_store(
-            batch_first, _read_store(spark, f"{store}/trigrams", width)
+        probe = ks.probe(
+            TRIGRAMS, batch_first, ks.read(spark, TRIGRAMS, store, width)
         )
         with shuffle_scoped_to_buckets(spark, width):
             plan = _plan_of(probe)

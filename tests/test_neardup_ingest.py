@@ -297,8 +297,10 @@ def test_novelty_ingest_replay_is_idempotent(spark, tmp_path):
     the earlier epoch ran once or twice.  Also pins the attribution
     semantics: partial trigram overlap yields partial novelty, an
     exact twin of an admitted doc scores zero."""
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.novelty import (
-        _read_store,
+        N_BUCKETS,
+        TRIGRAMS,
         novelty_ingest_batch,
     )
 
@@ -325,10 +327,10 @@ def test_novelty_ingest_replay_is_idempotent(spark, tmp_path):
     assert s2a[10].n_novel == 1 and s2a[10].n_trigrams == 3
     assert s2a[11].novelty == 1.0
 
-    n_store = _read_store(spark, f"{store}/trigrams").count()
+    n_store = ks.read(spark, TRIGRAMS, store, N_BUCKETS).count()
     # replay epoch 2 (crash after append): store must not grow
     novelty_ingest_batch(b2, store)
-    assert _read_store(spark, f"{store}/trigrams").count() == n_store
+    assert ks.read(spark, TRIGRAMS, store, N_BUCKETS).count() == n_store
 
     s3 = {r.doc_id: r for r in novelty_ingest_batch(b3, store).collect()}
     assert s3[20].n_novel == 0  # twin of an admitted doc
@@ -341,8 +343,10 @@ def test_line_dedup_ingest_keep_first_and_replay(spark, tmp_path):
     ordinal); a later batch keeps nothing the store already holds;
     replaying an epoch neither grows the store nor changes a later
     batch's verdicts."""
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
-        _read_store,
+        LINES,
+        N_BUCKETS,
         line_dedup_ingest_batch,
     )
 
@@ -368,10 +372,10 @@ def test_line_dedup_ingest_keep_first_and_replay(spark, tmp_path):
     assert (s1[1].n_lines, s1[1].n_kept, s1[1].kept_ords) == (2, 2, "0,1")
     assert (s1[2].n_lines, s1[2].n_kept, s1[2].kept_ords) == (2, 1, "1")
 
-    n_store = _read_store(spark, f"{store}/lines").count()
+    n_store = ks.read(spark, LINES, store, N_BUCKETS).count()
     assert n_store == 3  # line_a, line_b, line_c
     line_dedup_ingest_batch(b1, store)  # crash replay after append
-    assert _read_store(spark, f"{store}/lines").count() == n_store
+    assert ks.read(spark, LINES, store, N_BUCKETS).count() == n_store
 
     s2 = {r.doc_id: r for r in line_dedup_ingest_batch(b2, store).collect()}
     assert (s2[10].n_lines, s2[10].n_kept, s2[10].kept_ords) == (2, 0, "")
@@ -402,10 +406,10 @@ def test_line_store_probe_is_bucketed_with_zero_store_exchange(
     from kafkastreamsproject_spark.sources.bucketed import (
         shuffle_scoped_to_buckets,
     )
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
+        LINES,
         N_BUCKETS,
-        _read_store,
-        fresh_against_store,
         line_dedup_ingest_batch,
         lines_expr,
     )
@@ -441,8 +445,8 @@ def test_line_store_probe_is_bucketed_with_zero_store_exchange(
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = fresh_against_store(
-            batch_first, _read_store(spark, f"{store}/lines")
+        probe = ks.probe(
+            LINES, batch_first, ks.read(spark, LINES, store, N_BUCKETS)
         )
         with shuffle_scoped_to_buckets(spark, N_BUCKETS):
             plan = _plan_of(probe)
@@ -472,11 +476,11 @@ def test_novelty_store_probe_is_bucketed_with_zero_store_exchange(
     from kafkastreamsproject_spark.sources.bucketed import (
         shuffle_scoped_to_buckets,
     )
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.novelty import (
         N_BUCKETS,
-        _read_store,
+        TRIGRAMS,
         doc_trigram_hashes,
-        fresh_against_store,
         novelty_ingest_batch,
     )
 
@@ -494,8 +498,8 @@ def test_novelty_store_probe_is_bucketed_with_zero_store_exchange(
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = fresh_against_store(
-            batch_first, _read_store(spark, f"{store}/trigrams")
+        probe = ks.probe(
+            TRIGRAMS, batch_first, ks.read(spark, TRIGRAMS, store, N_BUCKETS)
         )
         with shuffle_scoped_to_buckets(spark, N_BUCKETS):
             plan = _plan_of(probe)
@@ -522,9 +526,9 @@ def test_line_store_nondefault_width_keeps_zero_store_exchange(
     from kafkastreamsproject_spark.sources.bucketed import (
         shuffle_scoped_to_buckets,
     )
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
-        _read_store,
-        fresh_against_store,
+        LINES,
         line_dedup_ingest_batch,
         lines_expr,
     )
@@ -563,8 +567,8 @@ def test_line_store_nondefault_width_keeps_zero_store_exchange(
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = fresh_against_store(
-            batch_first, _read_store(spark, f"{store}/lines", width)
+        probe = ks.probe(
+            LINES, batch_first, ks.read(spark, LINES, store, width)
         )
         with shuffle_scoped_to_buckets(spark, width):
             plan = _plan_of(probe)
@@ -575,11 +579,12 @@ def test_line_store_nondefault_width_keeps_zero_store_exchange(
 
 
 def test_line_and_novelty_store_compaction(spark, tmp_path):
-    """compact_store bounds the per-epoch file accumulation for both
+    """keyedstore.compact bounds the per-epoch file accumulation for both
     ingest stores: fewer data files, identical rows, and the next fold
     still dedups against the compacted state."""
     import glob
 
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming import linededup as LD
     from kafkastreamsproject_spark.streaming import novelty as NV
 
@@ -591,7 +596,7 @@ def test_line_and_novelty_store_compaction(spark, tmp_path):
         r.lh for r in spark.read.parquet(f"{lstore}/lines").collect()
     )
     files_before = len(glob.glob(f"{lstore}/lines/*.parquet"))
-    n_after = LD.compact_store(spark, lstore)
+    n_after = ks.compact(spark, LD.LINES, lstore, LD.N_BUCKETS)
     files_after = len(glob.glob(f"{lstore}/lines/*.parquet"))
     assert n_after == files_after <= min(LD.N_BUCKETS, files_before)
     assert (
@@ -616,7 +621,7 @@ def test_line_and_novelty_store_compaction(spark, tmp_path):
         for r in spark.read.parquet(f"{nstore}/trigrams").collect()
     )
     nfiles_before = len(glob.glob(f"{nstore}/trigrams/*.parquet"))
-    nn_after = NV.compact_store(spark, nstore)
+    nn_after = ks.compact(spark, NV.TRIGRAMS, nstore, NV.N_BUCKETS)
     nfiles_after = len(glob.glob(f"{nstore}/trigrams/*.parquet"))
     assert nn_after == nfiles_after <= min(NV.N_BUCKETS, nfiles_before)
     assert (
@@ -636,21 +641,17 @@ def test_line_and_novelty_store_compaction(spark, tmp_path):
 
 
 def test_forget_keys_touches_only_affected_buckets(spark, sf_dir, tmp_path):
-    """GDPR-style targeted deletion (sources/bucketed.py:
-    forget_keys_in_store): forgetting a handful of line hashes must
+    """GDPR-style targeted deletion (streaming/keyedstore.py:
+    forget_keys): forgetting a handful of line hashes must
     (a) remove exactly those rows, (b) re-admit them on re-ingest, and
     (c) leave every unaffected bucket's files BYTE-IDENTICAL (same
     path, length, mtime) — the deletion-cost ∝ affected-buckets claim,
     checked at the file level."""
     from kafkastreamsproject_spark.operators.fs import _fs_and_path
-    from kafkastreamsproject_spark.sources.bucketed import (
-        forget_keys_in_store,
-        store_table_name,
-    )
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
+        LINES,
         N_BUCKETS,
-        _STORE_SCHEMA,
-        _read_store,
         line_dedup_ingest_batch,
     )
 
@@ -661,15 +662,17 @@ def test_forget_keys_touches_only_affected_buckets(spark, sf_dir, tmp_path):
     )
     line_dedup_ingest_batch(docs, store)
     path = f"{store}/lines"
-    before = _read_store(spark, path).select("lh").toPandas()
+    before = ks.read(spark, LINES, store, N_BUCKETS).select("lh").toPandas()
     assert len(before) == 16  # 8 docs x 2 lines, all unique
 
     # forget the two lexicographically-lowest line hashes
     import pyspark.sql.functions as F2
 
-    all_rows = sorted(r.lh for r in _read_store(spark, path).collect())
+    all_rows = sorted(
+        r.lh for r in ks.read(spark, LINES, store, N_BUCKETS).collect()
+    )
     victims = spark.createDataFrame(
-        [(h,) for h in all_rows[:2]], _STORE_SCHEMA
+        [(h,) for h in all_rows[:2]], LINES.schema
     )
     fs, root = _fs_and_path(spark, path)
     snap = {
@@ -683,19 +686,13 @@ def test_forget_keys_touches_only_affected_buckets(spark, sf_dir, tmp_path):
             F2.pmod(F2.hash("lh"), F2.lit(N_BUCKETS)).alias("b")
         ).collect()
     }
-    stats = forget_keys_in_store(
-        spark,
-        victims,
-        path,
-        store_table_name("line_store", path),
-        _STORE_SCHEMA,
-        ["lh"],
-        N_BUCKETS,
-    )
+    stats = ks.forget_keys(spark, LINES, victims, store, N_BUCKETS)
     assert stats["rows_deleted"] == 2
     assert stats["affected_buckets"] == len(victim_buckets)
 
-    after_rows = sorted(r.lh for r in _read_store(spark, path).collect())
+    after_rows = sorted(
+        r.lh for r in ks.read(spark, LINES, store, N_BUCKETS).collect()
+    )
     assert after_rows == all_rows[2:]  # victims gone, everything else kept
 
     # unaffected buckets: files byte-identical (name, length, mtime)
@@ -731,10 +728,10 @@ def test_line_store_compaction_bounds_files_and_preserves_probes(
     recorded in the assertion), keep every admitted hash, and leave
     the next fold's verdicts identical to an uncompacted twin store."""
     from kafkastreamsproject_spark.operators.fs import _fs_and_path
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
+        LINES,
         N_BUCKETS,
-        _read_store,
-        compact_store,
         line_dedup_ingest_batch,
     )
 
@@ -762,17 +759,18 @@ def test_line_store_compaction_bounds_files_and_preserves_probes(
         )
 
     before = n_files(stores["compacted"])
-    after = compact_store(spark, stores["compacted"])
+    after = ks.compact(spark, LINES, stores["compacted"], N_BUCKETS)
     assert after == n_files(stores["compacted"])
     # 4 epochs x files-per-epoch collapses to <= 1 file per bucket
     assert before >= 2 * after
     assert after <= N_BUCKETS
 
     rows_c = sorted(
-        r.lh for r in _read_store(spark, f"{stores['compacted']}/lines").collect()
+        r.lh
+        for r in ks.read(spark, LINES, stores["compacted"], N_BUCKETS).collect()
     )
     rows_p = sorted(
-        r.lh for r in _read_store(spark, f"{stores['plain']}/lines").collect()
+        r.lh for r in ks.read(spark, LINES, stores["plain"], N_BUCKETS).collect()
     )
     assert rows_c == rows_p
 
@@ -796,14 +794,10 @@ def test_store_width_mismatch_is_rejected(spark, tmp_path):
 
     import pytest
 
-    from kafkastreamsproject_spark.sources.bucketed import (
-        compact_bucketed_store,
-        forget_keys_in_store,
-        read_bucketed_store,
-        read_store_meta,
-        store_table_name,
-    )
+    from kafkastreamsproject_spark.sources.bucketed import read_store_meta
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
     from kafkastreamsproject_spark.streaming.linededup import (
+        LINES,
         line_dedup_ingest_batch,
     )
 
@@ -821,20 +815,13 @@ def test_store_width_mismatch_is_rejected(spark, tmp_path):
             _docs(spark, [(2, "w " * 24)]), store, n_buckets=32
         )
     with pytest.raises(ValueError, match="created with"):
-        read_bucketed_store(
-            spark, lines, store_table_name("line_store", lines),
-            "lh string", ["lh"], 32,
-        )
+        ks.read(spark, LINES, store, 32)
     with pytest.raises(ValueError, match="created with"):
-        compact_bucketed_store(
-            spark, lines, store_table_name("line_store", lines),
-            "lh string", ["lh"], 32,
-        )
+        ks.compact(spark, LINES, store, 32)
     with pytest.raises(ValueError, match="created with"):
-        forget_keys_in_store(
-            spark, _docs(spark, [(1, "x")]).selectExpr("text as lh"),
-            lines, store_table_name("line_store", lines),
-            "lh string", ["lh"], 32,
+        ks.forget_keys(
+            spark, LINES, _docs(spark, [(1, "x")]).selectExpr("text as lh"),
+            store, 32,
         )
 
     # the right width still works, and compaction re-stamps the sidecar
@@ -846,9 +833,7 @@ def test_store_width_mismatch_is_rejected(spark, tmp_path):
         ).collect()
     }
     assert s[3] == 0
-    from kafkastreamsproject_spark.streaming.linededup import compact_store
-
-    compact_store(spark, store, n_buckets=8)
+    ks.compact(spark, LINES, store, 8)
     assert read_store_meta(spark, lines) == {
         "n_buckets": 8,
         "bucket_cols": ["lh"],
@@ -883,3 +868,47 @@ def test_novelty_store_width_mismatch_is_rejected(spark, tmp_path):
         novelty_ingest_batch(
             _docs(spark, [(2, "g h i j k l")]), store, n_buckets=16
         )
+
+
+def test_hash_set_drop_removes_table_and_directory(spark, tmp_path):
+    """keyedstore.drop after two folds into a hash set: the set's
+    catalog entry and its directory are both gone, and the catalog
+    holds what it held before the first fold."""
+    import os
+
+    from kafkastreamsproject_spark.streaming import keyedstore as ks
+    from kafkastreamsproject_spark.streaming.novelty import (
+        N_BUCKETS,
+        TRIGRAMS,
+        novelty_ingest_batch,
+    )
+
+    def tables():
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = tables()
+    store = str(tmp_path / "drop_store")
+    novelty_ingest_batch(_docs(spark, [(1, "alpha beta gamma delta")]), store)
+    novelty_ingest_batch(_docs(spark, [(2, "one two three four")]), store)
+    assert spark.catalog.tableExists(TRIGRAMS.table(store))
+    assert ks.read(spark, TRIGRAMS, store, N_BUCKETS).count() == 4
+
+    ks.drop(spark, TRIGRAMS, store)
+    assert not spark.catalog.tableExists(TRIGRAMS.table(store))
+    assert tables() == before
+    assert not os.path.exists(store)
+
+
+def test_line_dedup_ingest_builder_leaves_catalog_unchanged(spark, sf_dir):
+    """Building ``streaming_line_dedup_ingest`` folds into a temp line
+    store and deletes it; the session catalog must list the same tables
+    afterwards, with no ``line_store_<md5>`` entry left pointing at the
+    deleted directory."""
+    from kafkastreamsproject_spark.plans.registry import shadow_queries
+
+    def tables():
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = tables()
+    shadow_queries()["streaming_line_dedup_ingest"].spark(spark, sf_dir)
+    assert tables() == before
